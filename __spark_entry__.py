@@ -1,9 +1,10 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Driver contract (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+``entry(spark)`` is a smoke check; each ``queries()[name]`` is compared
+against the matching ``oracle_sql()[name]`` run in DuckDB (row count,
+schema and order-insensitive values — ``tests/test_registry.py`` runs
+the same check for every query at sf0.001). Both dicts list the whole
+registry in registration order.
 
 Implementation lives in ``streambench_spark/`` — this file only adapts
 the registry (streambench_spark/plans/queries.py) to the contract.

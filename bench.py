@@ -11,7 +11,9 @@ kept under ~1800 bytes: it carries the totals, the streaming metric tuple,
 a fixed set of headline queries plus the slowest five, and a pointer to
 ``BENCH_FULL.json`` (written next to this file) holding every per-query
 timing. Round 2 printed all timings on the line and the driver's tail cut
-it mid-object (BENCH_r02 ``parsed: null``) — the split is the fix.
+it mid-object (BENCH_r02 ``parsed: null``) — the split is the fix. If any
+query fails, ``value`` is null and the failures are listed by exception
+class (``errors_by_class``) on the line and in the file.
 
 Each query is forced end-to-end with a ``noop``-format write — full
 execution on the executors, zero driver-side collect, which is the shape a
@@ -51,10 +53,15 @@ HEADLINE = [
 ]
 
 
-def _run_registry(spark, sf_dir: str) -> dict[str, float]:
+def _run_registry(
+    spark, sf_dir: str
+) -> tuple[dict[str, float | None], dict[str, dict[str, str]]]:
+    """Time every registry query. A failed query times as None and its
+    error ({"class", "message"}) is returned keyed by query name."""
     from streambench_spark.plans.queries import REGISTRY
 
-    timings: dict[str, float] = {}
+    timings: dict[str, float | None] = {}
+    errors: dict[str, dict[str, str]] = {}
     for name, qdef in REGISTRY.items():
         t0 = time.perf_counter()
         try:
@@ -62,9 +69,25 @@ def _run_registry(spark, sf_dir: str) -> dict[str, float]:
             df.write.format("noop").mode("overwrite").save()
             timings[name] = round(time.perf_counter() - t0, 3)
         except Exception as exc:  # keep the one-line contract even on error
-            timings[name] = -1.0
+            timings[name] = None
+            errors[name] = {"class": type(exc).__name__, "message": str(exc)[:300]}
             print(f"bench error in {name}: {exc!r}", file=sys.stderr)
-    return timings
+    return timings, errors
+
+
+def _registry_total(timings: dict[str, float | None]) -> float | None:
+    """The headline total, or None when any query failed: a query that
+    starts failing must not make the total look faster."""
+    if any(t is None for t in timings.values()):
+        return None
+    return round(sum(timings.values()), 3)
+
+
+def _errors_by_class(errors: dict[str, dict[str, str]]) -> dict[str, list[str]]:
+    by_class: dict[str, list[str]] = {}
+    for name, err in sorted(errors.items()):
+        by_class.setdefault(err["class"], []).append(name)
+    return by_class
 
 
 def _streaming_trials(spark, sf_dir: str, cpus: int) -> dict:
@@ -737,8 +760,9 @@ def main() -> None:
         for d in tmp_dirs:
             shutil.rmtree(d, ignore_errors=True)
 
-    timings = _run_registry(spark, sf_dir)
-    total = round(sum(t for t in timings.values() if t >= 0), 3)
+    timings, errors = _run_registry(spark, sf_dir)
+    total = _registry_total(timings)
+    errors_by_class = _errors_by_class(errors)
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     try:
         sf_val: float | str = float(sf)
@@ -818,6 +842,8 @@ def main() -> None:
                 "unit": "sec",
                 "sf": sf_val,
                 "queries": timings,
+                "errors": errors,
+                "errors_by_class": errors_by_class,
                 "streaming_ysb": streaming,
                 "skew_probe": skew,
                 "scaled": scaled,
@@ -837,10 +863,9 @@ def main() -> None:
             sort_keys=True,
         )
 
-    errors = sorted(n for n, t in timings.items() if t < 0)
     slowest = dict(
         sorted(
-            ((n, t) for n, t in timings.items() if t >= 0),
+            ((n, t) for n, t in timings.items() if t is not None),
             key=lambda kv: -kv[1],
         )[:5]
     )
@@ -860,7 +885,7 @@ def main() -> None:
         "sf": sf_val,
         "n_queries": len(timings),
         "n_errors": len(errors),
-        "errors": errors[:5],
+        "errors_by_class": {c: names[:3] for c, names in errors_by_class.items()},
         "n_trial_errors": len(trial_errors),
         "trial_errors": [e[:120] for e in trial_errors[:2]],
         "stderr_bytes": stderr_bytes,

@@ -1341,7 +1341,7 @@ def _copurchase_edges(li: DataFrame, basket_local: bool = False) -> DataFrame:
     saved exchange does not buy back). So the flag defaults to the
     self-join and only the measured winner opts in.
 
-    Above the shipped SF (scripts/basket_pair_scale_probe.py, 8x
+    Above the shipped SF (SURVEY.md, Round-11 amendments: 8x
     replicated baskets = 4.8M rows, 5-rep interleaved medians): the
     itempairs pair-count core keeps winning basket-local (1.94→1.68 s,
     and −23% shuffle-write bytes, 197→152 MB — the cluster-network
@@ -4841,8 +4841,8 @@ def q_copurchase_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFr
     pass over the edge frame → the basket-local edge build wins here
     at the benched SF (r11 A/B: 2.11→1.45 s at sf0.1, consistent over
     5 interleaved reps; at 8x volume the two converge with a slight
-    self-join edge — see _copurchase_edges and
-    scripts/basket_pair_scale_probe.py for the full picture)."""
+    self-join edge — see _copurchase_edges and the SURVEY.md
+    Round-11 amendments for the full picture)."""
     li = load_table(spark, sf_dir, "lineitem")
     edges = _copurchase_edges(li, basket_local=True)
     deg = (

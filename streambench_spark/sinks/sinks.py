@@ -73,6 +73,9 @@ def latency_marking_sink(
     """S10: stamps each micro-batch with arrival time (processing clock)
     and appends (arrival_ms, rows, max_last_update_ms) to ``collector`` —
     the Kafka-free analog of the broker LogAppendTime latency clock.
+    The batch is lazy until its aggregate is collected, so the stamp is
+    taken after ``collect()`` returns: every record has been produced by
+    then, and ``arrival_ms >= max_last_update_ms`` holds.
 
     ``gc_probe`` appends a 4th element: the cumulative driver-JVM GC time
     at batch arrival (jvm_gc_millis). Consecutive differences attribute a
@@ -83,11 +86,11 @@ def latency_marking_sink(
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         import time
 
-        arrival_ms = int(time.time() * 1000)
         agg = batch_df.agg(
             F.count(F.lit(1)).alias("rows"),
             F.max("last_update_ms").alias("max_lu"),
         ).collect()[0]
+        arrival_ms = int(time.time() * 1000)
         rec = (arrival_ms, agg["rows"], agg["max_lu"])
         if gc_probe:
             rec = rec + (jvm_gc_millis(batch_df.sparkSession),)

@@ -66,6 +66,41 @@ def test_latency_trial_gc_probe(spark):
     )
 
 
+def test_latency_marking_sink_stamps_after_collect(spark, tmp_path):
+    """The batch handed to foreachBatch is lazy: its records are produced
+    by the sink's own collect. Each record's last_update_ms comes from a
+    UDF that returns the wall clock when it runs, so a stamp taken before
+    the collect would precede the records it measures."""
+    import time
+
+    from pyspark.sql import functions as F
+
+    from streambench_spark.sinks.sinks import latency_marking_sink
+
+    def now_ms(_):
+        time.sleep(0.01)  # the records are produced strictly after entry
+        return int(time.time() * 1000)
+
+    clock = F.udf(now_ms, "long").asNondeterministic()
+    src = str(tmp_path / "src")
+    for i in range(3):
+        spark.range(i * 50, (i + 1) * 50).coalesce(1).write.mode(
+            "append").parquet(src)
+    stream = (
+        spark.readStream.schema("id long").option("maxFilesPerTrigger", 1)
+        .parquet(src)
+        .withColumn("last_update_ms", clock("id"))
+    )
+    collector: list = []
+    q = latency_marking_sink(stream, collector, mode="append",
+                             available_now=True)
+    assert q.awaitTermination(120)
+    recs = [r for r in collector if r[1]]
+    assert len(recs) == 3
+    for arrival_ms, _, max_last_update_ms in recs:
+        assert arrival_ms >= max_last_update_ms
+
+
 def test_jvm_gc_millis_monotone(spark):
     from streambench_spark.sinks.sinks import jvm_gc_millis
 
@@ -307,6 +342,30 @@ def test_merge_scaled_history_same_key_latest_wins(tmp_path):
     merged = bench._merge_scaled_history(str(full), dict(fresh))
     assert len(merged["history"]) == 1
     assert merged["history"][0]["batch_median_ratio_per_copy"] == 0.124
+
+
+def test_run_registry_failed_query_nulls_total(spark, monkeypatch):
+    """A failing query must not make the headline total faster: its time
+    is None, the total is None, and the error is listed by class."""
+    import types
+
+    import bench
+    from streambench_spark.plans import queries as Q
+
+    def boom(spark, sf_dir):
+        raise ValueError("planted failure")
+
+    monkeypatch.setattr(Q, "REGISTRY", {
+        "ok": types.SimpleNamespace(fn=lambda spark, sf_dir: spark.range(3)),
+        "bad": types.SimpleNamespace(fn=boom),
+    })
+    timings, errors = bench._run_registry(spark, SF_DIR)
+    assert timings["ok"] >= 0
+    assert timings["bad"] is None
+    assert errors == {"bad": {"class": "ValueError", "message": "planted failure"}}
+    assert bench._registry_total(timings) is None
+    assert bench._registry_total({"ok": timings["ok"]}) == timings["ok"]
+    assert bench._errors_by_class(errors) == {"ValueError": ["bad"]}
 
 
 def test_degraded_environment_threshold():

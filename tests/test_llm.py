@@ -851,3 +851,37 @@ def test_chunk_docs_udtf_null_text_matches_builtin(spark):
     b = sorted(map(tuple, text.chunk_docs_udtf(docs, chunk_tokens=2).collect()))
     assert a == b
     assert {t[0] for t in a} == {1}
+
+
+def test_kmeans_argmin_struct_equals_window(spark):
+    """The q_kmeans* argmin, min(struct(dist, c)), picks the same winner
+    as ORDER BY dist ASC, c ASC, including EXACT ties on dist (the
+    tie-break falls to the centroid id)."""
+    from pyspark.sql import Window
+
+    rows = [
+        # vec 1: exact tie between centroids "b" and "a" -> "a" wins
+        (1, "b", 1.0), (1, "a", 1.0), (1, "c", 2.0),
+        # vec 2: plain minimum
+        (2, "c", 0.25), (2, "a", 0.5), (2, "b", 0.75),
+        # vec 3: three-way tie -> lexicographically smallest id
+        (3, "c", 4.0), (3, "b", 4.0), (3, "a", 4.0),
+    ]
+    d = spark.createDataFrame(rows, "vec_id long, c string, dist double")
+
+    agg = (
+        d.groupBy("vec_id")
+        .agg(F.min(F.struct("dist", "c")).alias("_best"))
+        .select("vec_id", F.col("_best.c").alias("c"))
+    )
+    w = Window.partitionBy("vec_id").orderBy(
+        F.col("dist").asc(), F.col("c").asc()
+    )
+    win = (
+        d.withColumn("rn", F.row_number().over(w))
+        .filter("rn = 1")
+        .select("vec_id", "c")
+    )
+    got_agg = {(r["vec_id"], r["c"]) for r in agg.collect()}
+    got_win = {(r["vec_id"], r["c"]) for r in win.collect()}
+    assert got_agg == got_win == {(1, "a"), (2, "c"), (3, "a")}

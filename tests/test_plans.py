@@ -145,6 +145,72 @@ def test_dataset_shuffle_uses_range_partitioning(spark):
     assert "BroadcastHashJoin" in full
 
 
+def test_load_table_memo_invalidates_on_rewrite(spark, tmp_path):
+    """load_table's schema/DataFrame memo is plan caching, never row
+    caching: an unchanged file returns the memoized plan object, a
+    rewritten one (new mtime/size) misses and its new rows are seen."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from streambench_spark.catalog import load_table
+
+    sf_dir = str(tmp_path)
+    path = os.path.join(sf_dir, "documents.parquet")
+    pq.write_table(
+        pa.table({"doc_id": pa.array([1, 2], pa.int64()),
+                  "text": pa.array(["a", "b"], pa.string())}),
+        path,
+    )
+    first = load_table(spark, sf_dir, "documents")
+    assert {r["doc_id"] for r in first.collect()} == {1, 2}
+
+    # unchanged file: the memo returns the SAME immutable plan object
+    assert load_table(spark, sf_dir, "documents") is first
+
+    # rewrite (different rows => different size, fresh mtime): the
+    # (path, mtime_ns, size) key must miss and the new rows must be
+    # what executions see
+    pq.write_table(
+        pa.table({"doc_id": pa.array([7, 8, 9], pa.int64()),
+                  "text": pa.array(["x", "y", "z"], pa.string())}),
+        path,
+    )
+    second = load_table(spark, sf_dir, "documents")
+    assert second is not first
+    assert {r["doc_id"] for r in second.collect()} == {7, 8, 9}
+
+
+def test_lru_memo_bounds_growth():
+    """The catalog memos must stay bounded in a long-lived session that
+    loads many distinct paths: eviction is least-recently-USED, so a
+    looping workload's working set stays resident while one-shot paths
+    age out."""
+    from streambench_spark.catalog import _LRUMemo
+
+    m = _LRUMemo(maxsize=4)
+    for i in range(10):
+        m[("k", i)] = i
+    assert len(m) == 4
+    # the most recent 4 survive
+    assert set(m.keys()) == {("k", i) for i in (6, 7, 8, 9)}
+    # a get() refreshes recency: key 6 survives the next insert, 7 doesn't
+    assert m.get(("k", 6)) == 6
+    m[("k", 10)] = 10
+    assert m.get(("k", 6)) == 6
+    assert m.get(("k", 7)) is None
+
+
+def test_catalog_memos_are_lru_bounded():
+    from streambench_spark.catalog import _DF_MEMO, _SCHEMA_MEMO, _LRUMemo
+
+    assert isinstance(_SCHEMA_MEMO, _LRUMemo)
+    assert isinstance(_DF_MEMO, _LRUMemo)
+    assert _SCHEMA_MEMO._maxsize >= 64  # plenty for a bench run's tables
+    assert _DF_MEMO._maxsize >= 64
+
+
 def test_ysb_sql_frontend_same_physical_shape(spark):
     """The SQL-frontend YSB compiles to the same physical shape as the
     DataFrame builder: broadcast dim join, one agg shuffle, filter pushed."""

