@@ -1,30 +1,31 @@
-"""Benchmark entry point (driver contract).
+"""Benchmark entry point (driver contract): the registry total.
 
 Runs the registry's queries at ``$SPARK_GRAFT_SF_DIR`` (default
 /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE
 COMPACT JSON line LAST::
 
-    {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+    {"metric": "registry_total_runtime", "value": N, "unit": "sec",
+     "cpus": N, "queries": {...}, "sf": ...}
 
 The driver records only a ~2000-char tail of stdout, so the final line is
-kept under ~1800 bytes: it carries the totals, the streaming metric tuple,
+kept under ~1800 bytes: it carries the total, the host shape and gauges,
 a fixed set of headline queries plus the slowest five, and a pointer to
 ``BENCH_FULL.json`` (written next to this file) holding every per-query
 timing. Round 2 printed all timings on the line and the driver's tail cut
 it mid-object (BENCH_r02 ``parsed: null``) — the split is the fix. If any
 query fails, ``value`` is null and the failures are listed by exception
-class (``errors_by_class``) on the line and in the file.
+class (``errors_by_class``) on the line and in the file. ``cpus`` is the
+``local[N]`` count: totals taken at different counts do not compare.
 
 Each query is forced end-to-end with a ``noop``-format write — full
 execution on the executors, zero driver-side collect, which is the shape a
 100 TB run has (results land in a sink, not the driver).
 
-``SPARK_GRAFT_BENCH_REPLICATE=k`` additionally replays the streaming YSB
-trial over a k×-replicated events table (ids offset per copy), reporting
-rows/s above the shipped sf so the throughput claim is tested beyond
-sf0.1. The richer harness (trial loop M4, param registry M5, throughput/
-latency tuple M1-M3 per ysb/benchmark/yahoo/Benchmark.scala:59-126) lives
-in ``streambench_spark/bench/``.
+The streaming YSB tuple (throughput, latency p50/p95) is measured by
+``python3 perfbench/run.py --workload ysb_live``; the reference-parity
+trial loop (M4), param registry (M5) and throughput/latency tuple (M1-M3,
+ysb/benchmark/yahoo/Benchmark.scala:59-126) live in
+``streambench_spark/bench/``.
 """
 
 from __future__ import annotations
@@ -88,368 +89,6 @@ def _errors_by_class(errors: dict[str, dict[str, str]]) -> dict[str, list[str]]:
     for name, err in sorted(errors.items()):
         by_class.setdefault(err["class"], []).append(name)
     return by_class
-
-
-def _streaming_trials(spark, sf_dir: str, cpus: int) -> dict:
-    """Reference metric tuple (M1 throughput + M3 latency min/avg/p95/p99/
-    max — BASELINE.md obligations) from bounded streaming YSB trials."""
-    from streambench_spark.bench import BenchParams
-    from streambench_spark.bench.harness import (
-        run_latency_trial,
-        run_throughput_trial,
-    )
-    from streambench_spark.catalog import load_table
-    from streambench_spark.sources.replay import stream_table
-    from streambench_spark.streaming.ysb import ysb_streaming
-
-    streaming: dict = {}
-
-    def bounded():
-        return ysb_streaming(
-            stream_table(spark, sf_dir, "events"),
-            load_table(spark, sf_dir, "customer"),
-            window="1 hour",
-            watermark=None,
-        )
-
-    # Headline throughput: the reference's methodology (rate-source
-    # target, listener-counted lower bound, StreamBenchMain.scala:32 +
-    # SparkYahooRunner.scala:91-113) over the full filter→project→
-    # broadcast-join→windowed-agg pipeline. The request rate must exceed
-    # pipeline capacity or the trial measures the GENERATOR, not the
-    # engine (measured on local[32]: 6M/s requested → 5.1M processed,
-    # request-capped; 20/28/36M/s requested → 16.4/16.8/16.8M processed,
-    # saturated). 28M/s sits safely past the knee; reported is processed
-    # rows/s — vs the reference targets of 2M/s (Spark path) and 2.7M/s
-    # (StreamBox release config). Like the reference's trial loop
-    # (Benchmark.scala:59-126, M4), the headline is the MEDIAN of 3
-    # measured trials after 1 warmup, and each trial runs 30 s: 15 s
-    # trials measured BIMODAL (9.3-18.6M on one r07 day — the ~2-4 s
-    # query startup and batch-boundary quantization land inside the
-    # window and swing the listener count), while 30 s trials are
-    # stable (20.5/20.5/20.5/22.4M back-to-back, startup amortized).
-    # All four raw points are published in BENCH_FULL.
-    live_tput = BenchParams(duration_s=30, rows_per_second=28_000_000,
-                            ramp_up_seconds=0, watermark="1 second",
-                            num_partitions=cpus)
-    runs = [run_throughput_trial(spark, live_tput, source=None)
-            for _ in range(4)]
-    measured = sorted(runs[1:], key=lambda r: r["throughput_rows_per_s"])
-    streaming.update(measured[1])  # the median measured trial's tuple
-    streaming["throughput_trials_rows_per_s"] = [
-        r["throughput_rows_per_s"] for r in runs
-    ]
-    streaming["throughput_warmup_trials"] = 1
-    # Secondary: bounded file-replay drain of the frozen sf events table
-    # (deterministic row count; proves the S7 path end-to-end).
-    replay = run_throughput_trial(spark, BenchParams(duration_s=60),
-                                  source=bounded())
-    streaming.update({f"replay_{k}": v for k, v in replay.items()})
-    # Latency needs LIVE event times: the rate-source generator, arrival
-    # minus generation clock per micro-batch (M3). Honest sample math:
-    # nearest-rank over n batch samples means p95 == max whenever
-    # n <= 20 and p99 == max whenever n <= 100 — so the trial runs until
-    # AT LEAST 120 VALID samples are collected (empty micro-batches
-    # contribute no sample and must not count; floor 60 s, hard cap
-    # 300 s): p95 and p99 both separate from max in the RECORDED
-    # artifact, which is the number the docs must cite (the r06 close
-    # recorded 39 batches and its whole tail was the max sample).
-    # gc_probe stamps per-batch driver-JVM GC time: the top-3 latency
-    # batches are published with their GC deltas, so a tail spike is
-    # attributed to (or exonerated from) GC in the artifact itself.
-    live = BenchParams(duration_s=60, rows_per_second=200_000,
-                       ramp_up_seconds=0, watermark="1 second")
-    streaming.update(
-        run_latency_trial(spark, live, source=None, min_batches=120,
-                          max_duration_s=300, gc_probe=True)
-    )
-    return streaming
-
-
-# Events-driven headliners for the replicate-scale batch probe: one per
-# family whose input is the replicated fact (join, agg, windows, session,
-# sketch, interval join, percentiles, transition matrix, time series).
-SCALED_BATCH = [
-    "ysb",
-    "ysb_10s",
-    "session_windows",
-    "sliding_window_counts",
-    "windowed_distinct_users",
-    "cms_heavy_hitters",
-    "global_percentiles",
-    "interval_self_join_banded",
-    "event_transition_matrix",
-    "ohlc_hourly_bars",
-]
-
-
-def _replicated_trial(spark, sf_dir: str, copies: int,
-                      base_timings: dict[str, float]) -> dict:
-    """Scale-up evidence beyond the shipped sf: replicate the events fact
-    ``copies``× (event ids offset per copy so dedup-free operators see
-    distinct rows), symlink every other table, then (a) drain the YSB
-    streaming pipeline over it and (b) re-run the events-driven headline
-    batch queries against the replicated dir. ``ratio_per_copy`` =
-    time_at_k× / (k · time_at_1×): ~1.0 is linear scaling, < 1 means
-    fixed overhead amortizes away — the claim a 100 TB run rests on is
-    that this ratio does NOT grow with the data."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    # symlink targets must be absolute: a relative SPARK_GRAFT_SF_DIR
-    # would otherwise resolve relative to the tmp dir and dangle
-    sf_dir = os.path.abspath(sf_dir)
-
-    from streambench_spark.bench import BenchParams
-    from streambench_spark.bench.harness import run_throughput_trial
-    from streambench_spark.catalog import load_table
-    from streambench_spark.plans.queries import REGISTRY
-    from streambench_spark.sources.replay import stream_table
-    from streambench_spark.streaming.ysb import ysb_streaming
-
-    ev = load_table(spark, sf_dir, "events")
-    # one crossJoin with range(copies) — a k-leg union would build a
-    # k-node plan; this stays a single Generate regardless of k
-    copies_df = (
-        ev.crossJoin(F.broadcast(spark.range(copies).select(F.col("id").alias("_k"))))
-        .withColumn("event_id", F.col("event_id") + F.lit(10_000_000_000) * F.col("_k"))
-        .drop("_k")
-    )
-    import shutil
-
-    # try/finally + rmtree: every prior bench run leaked its replicated
-    # dir (r12 found 8 of them, 2.3 GB, in /tmp — the 1000x one alone is
-    # 2 GB). Same leak class ADVICE r11 flagged in the basket probe.
-    tmp = tempfile.mkdtemp(prefix="sb_benchrep_")
-    try:
-        path = os.path.join(tmp, "events.parquet")
-        copies_df.repartition(32).write.mode("overwrite").parquet(path)
-        for name in os.listdir(sf_dir):
-            if name != "events.parquet":
-                os.symlink(os.path.join(sf_dir, name), os.path.join(tmp, name))
-        out = ysb_streaming(
-            stream_table(spark, tmp, "events"),
-            load_table(spark, sf_dir, "customer"),
-            window="1 hour",
-            watermark=None,
-        )
-        res = run_throughput_trial(spark, BenchParams(duration_s=120), source=out)
-        # Release the drain's state/cache and nudge a full GC before the
-        # batch queries — at 1000x the post-drain heap is fragmented
-        # enough that 4 of the 10 queries died on GCLocker retries while
-        # passing standalone against the same table (r12; same hygiene
-        # the skew-twin probe applies between trials).
-        spark.catalog.clearCache()
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:
-            pass
-        batch: dict[str, dict] = {}
-        for name in SCALED_BATCH:
-            t0 = time.perf_counter()
-            try:
-                REGISTRY[name].fn(spark, tmp).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-            except Exception as exc:
-                # record the failure IN the artifact — the r12 1000x run
-                # silently dropped 4 queries whose errors lived only in a
-                # discarded stderr stream (the r05 trial_errors lesson,
-                # re-learned one level down)
-                print(f"bench error in scaled {name}: {exc!r}", file=sys.stderr)
-                batch[name] = {"error": repr(exc)[:200]}
-                continue
-            t = round(time.perf_counter() - t0, 3)
-            base = base_timings.get(name)
-            entry = {"scaled_s": t, "base_s": base}
-            if base and base > 0:
-                entry["ratio_per_copy"] = round(t / (copies * base), 3)
-            batch[name] = entry
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    ratios = sorted(
-        v["ratio_per_copy"] for v in batch.values() if "ratio_per_copy" in v
-    )
-    median_ratio = ratios[len(ratios) // 2] if ratios else None
-    return {
-        "copies": copies,
-        **res,
-        "batch": batch,
-        "batch_median_ratio_per_copy": median_ratio,
-    }
-
-
-def _skew_probe(spark, sf_dir: str) -> dict:
-    """Adversarial-skew probe (SCALE.md's skew claims, measured): remap
-    user_id so ONE user owns ~10% of all events, then time the plain vs
-    skew-safe twins on the identical frame — groupBy vs salted_grouped_agg
-    (operators/aggregates.py:24) and interval_join vs interval_join_banded
-    (operators/relational.py:54,116). AQE's skew-join splitting is ON (the
-    session default), so "plain" is Spark's best unaided effort; the probe
-    records what explicit salting/banding buys ON TOP at this scale. The
-    equality of results is pytest-enforced (tests/test_invariance.py);
-    here only wall-clock is recorded, into BENCH_FULL's skew_probe block."""
-    from pyspark.sql import functions as F
-
-    from streambench_spark.catalog import load_table
-    from streambench_spark.operators.aggregates import salted_grouped_agg
-    from streambench_spark.operators.relational import (
-        interval_join,
-        interval_join_banded,
-    )
-
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .withColumn(
-            "user_id",
-            F.when(F.col("event_id") % 10 == 0, F.lit(0)).otherwise(
-                F.col("user_id") + 1
-            ),
-        )
-        .select(
-            "event_id", "user_id", "ts", "event_type",
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
-        )
-        # freeze the skewed frame so each timed run measures the operator,
-        # not the remap scan
-        .localCheckpoint()
-    )
-
-    def timed(build):
-        t0 = time.perf_counter()
-        build().write.format("noop").mode("overwrite").save()
-        return round(time.perf_counter() - t0, 3)
-
-    views = ev.filter(F.col("event_type") == "view").select("user_id", "ts")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", F.col("ts").alias("pts")
-    )
-    out = {
-        "hot_key_share": 0.1,
-        "plain_agg_s": timed(
-            lambda: ev.groupBy("user_id").agg(
-                F.sum("cents").alias("s"), F.count(F.lit(1)).alias("n")
-            )
-        ),
-        "salted_agg_s": timed(
-            lambda: salted_grouped_agg(
-                ev,
-                keys=["user_id"],
-                partial_aggs=[
-                    F.sum("cents").alias("ps"),
-                    F.count(F.lit(1)).alias("pn"),
-                ],
-                final_aggs=[
-                    F.sum("ps").alias("s"),
-                    F.sum("pn").alias("n"),
-                ],
-            )
-        ),
-        "plain_interval_join_s": timed(
-            lambda: interval_join(
-                purchases, views, key="user_id",
-                left_ts="pts", right_ts="ts", upper="5 minutes",
-            )
-        ),
-        "banded_interval_join_s": timed(
-            lambda: interval_join_banded(
-                purchases, views, key="user_id",
-                left_ts="pts", right_ts="ts", upper="5 minutes",
-            )
-        ),
-    }
-    ev.unpersist()
-    return out
-
-
-def _current_round() -> int | None:
-    """The build round currently underway, anchored on VERDICT.md's
-    header: the judge writes "VERDICT — round N" at the END of round N,
-    so while it reads N the running round is N+1."""
-    import re
-
-    try:
-        with open(os.path.join(REPO, "VERDICT.md")) as fh:
-            m = re.search(r"round (\d+)", fh.readline())
-        return int(m.group(1)) + 1 if m else None
-    except Exception:
-        return None
-
-
-def _carry_scaled_forward(full_path: str) -> dict:
-    """Replicate-knob off (the driver's per-round run doesn't set it):
-    carry the last measured replicate probe forward instead of erasing
-    it — the r04 round-close wiped the committed 8x evidence to {} this
-    way. The carried block is marked AND stamped with provenance
-    (``carry_count`` increments per carry; ``measured_round`` is the
-    round whose run actually produced the numbers) so the published
-    record can't republish arbitrarily stale scale evidence unnoticed —
-    the repo-state guard (tests/test_bench.py) fails a committed block
-    carried more than 3 runs."""
-    try:
-        with open(full_path) as fh:
-            prev = json.load(fh).get("scaled") or {}
-    except Exception:
-        return {}
-    if not prev:
-        return {}
-    carried = dict(prev)
-    carried["carried_forward"] = True
-    carried["carry_count"] = int(prev.get("carry_count") or 0) + 1
-    return carried
-
-
-def _summary_point(block: dict) -> dict:
-    """The compact (copies, ratio, throughput, round) tuple a scaled
-    block contributes to the history ledger."""
-    return {
-        k: block.get(k)
-        for k in (
-            "copies",
-            "batch_median_ratio_per_copy",
-            "throughput_rows_per_s",
-            "measured_round",
-        )
-        if block.get(k) is not None
-    }
-
-
-def _merge_scaled_history(full_path: str, scaled: dict) -> dict:
-    """Keep every MEASURED replicate point across rewrites: the default
-    run measures 16x, but a one-off high-k run (e.g. 64x) would be
-    erased by the next default rewrite of BENCH_FULL.json — so each
-    measured block's summary is folded into a ``history`` list keyed by
-    (copies, measured_round), LAST point wins per key: a same-round
-    re-measurement supersedes the earlier one (the r06 ledger silently
-    dropped a fresher 16x point because the dedup was first-wins — the
-    r06 advice find)."""
-    history: list[dict] = []
-    try:
-        with open(full_path) as fh:
-            prev = json.load(fh).get("scaled") or {}
-        history = list(prev.get("history") or [])
-        if prev.get("copies") and not prev.get("carried_forward"):
-            history.append(_summary_point(prev))
-    except Exception:
-        pass
-    if scaled.get("copies") and not scaled.get("carried_forward"):
-        history.append(_summary_point(scaled))
-    by_key: dict = {}
-    for h in history:
-        if h.get("copies"):
-            # later entries overwrite: the list is ordered oldest-first
-            # (prior ledger, then prior block, then this run's block)
-            by_key[(h.get("copies"), h.get("measured_round"))] = h
-    deduped = sorted(
-        by_key.values(),
-        key=lambda h: (h.get("measured_round") or 0, h.get("copies") or 0),
-    )
-    if deduped:
-        out = dict(scaled)
-        out["history"] = deduped[-8:]
-        return out
-    return scaled
 
 
 def _cpu_gauge() -> float:
@@ -594,11 +233,6 @@ def main() -> None:
     _quarantine_stderr()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or "32")
-    # SPARK_GRAFT_BENCH_REGISTRY_ONLY=1: time ONLY the registry queries
-    # (skip streaming/skew/replicate trials) — the apples-to-apples mode
-    # for chasing registry-total drift across runs without any probe
-    # heating the JVM or disk in between.
-    registry_only = os.environ.get("SPARK_GRAFT_BENCH_REGISTRY_ONLY") == "1"
     gauge_start = _cpu_gauge()
     mem_gauge_start = _mem_gauge_gbps()
     stat_start = _proc_stat()
@@ -769,56 +403,6 @@ def main() -> None:
     except ValueError:
         sf_val = sf
 
-    # Trial failures are recorded in the JSON artifact itself, not only
-    # in the (gitignored) stderr log — the published record must
-    # distinguish "knob off" from "trial crashed" (the r05 advice find).
-    trial_errors: list[str] = []
-
-    streaming: dict = {}
-    if not registry_only:
-        try:
-            streaming = _streaming_trials(spark, sf_dir, cpus)
-        except Exception as exc:
-            trial_errors.append(f"streaming: {exc!r}"[:300])
-            print(f"bench error in streaming trial: {exc!r}", file=sys.stderr)
-
-    skew: dict = {}
-    if not registry_only:
-        try:
-            skew = _skew_probe(spark, sf_dir)
-        except Exception as exc:
-            trial_errors.append(f"skew_probe: {exc!r}"[:300])
-            print(f"bench error in skew probe: {exc!r}", file=sys.stderr)
-
-    # Replicate-scale probe: MEASURED in every default run (16x unless
-    # overridden; 0/1 disables) — a carried-forward block is the
-    # fallback for a crashed/disabled probe, not the steady state (the
-    # r05 scaled block was carried from r04's run; an endgame record
-    # should be measured in-round).
-    replicate = int(os.environ.get("SPARK_GRAFT_BENCH_REPLICATE") or "16")
-    if registry_only:
-        replicate = 0
-    scaled: dict = {}
-    # registry-only runs record to a SEPARATE file: they are drift
-    # diagnostics, not the published full record, and must not clobber
-    # BENCH_FULL.json's trial/scaled blocks.
-    full_path = os.path.join(
-        REPO, "BENCH_REGISTRY_ONLY.json" if registry_only else "BENCH_FULL.json"
-    )
-    if replicate > 1:
-        try:
-            scaled = _replicated_trial(spark, sf_dir, replicate, timings)
-            rnd = _current_round()
-            if rnd is not None:
-                scaled["measured_round"] = rnd
-        except Exception as exc:
-            trial_errors.append(f"replicated_trial: {exc!r}"[:300])
-            print(f"bench error in replicated trial: {exc!r}", file=sys.stderr)
-    if not registry_only:
-        if not scaled:
-            scaled = _carry_scaled_forward(full_path)
-        scaled = _merge_scaled_history(full_path, scaled)
-
     # Diagnostics volume in the quarantined stderr log: routine JVM WARN
     # chatter makes a bare non-empty flag useless, so record the byte
     # count — a reader sees at a glance whether the log holds the usual
@@ -832,31 +416,27 @@ def main() -> None:
     gauge_end = _cpu_gauge()
     mem_gauge_end = _mem_gauge_gbps()
     host_cpu = _host_cpu_pct(stat_start, _proc_stat())
+    degraded = _degraded_environment(mem_gauge_start, mem_gauge_end)
+    noisy = _noisy_cpu(host_cpu.get("steal_pct"))
 
     # Full record → file (the driver tail would truncate it inline).
-    with open(full_path, "w") as fh:
+    with open(os.path.join(REPO, "BENCH_FULL.json"), "w") as fh:
         json.dump(
             {
                 "metric": "registry_total_runtime",
                 "value": total,
                 "unit": "sec",
                 "sf": sf_val,
+                "cpus": cpus,
                 "queries": timings,
                 "errors": errors,
                 "errors_by_class": errors_by_class,
-                "streaming_ysb": streaming,
-                "skew_probe": skew,
-                "scaled": scaled,
-                "trial_errors": trial_errors,
                 "stderr_bytes": stderr_bytes,
                 "cpu_gauge_s": {"start": gauge_start, "end": gauge_end},
                 "mem_gauge_gbps": {"start": mem_gauge_start, "end": mem_gauge_end},
-                "degraded_environment": _degraded_environment(
-                    mem_gauge_start, mem_gauge_end
-                ),
-                "noisy_cpu": _noisy_cpu(host_cpu.get("steal_pct")),
+                "degraded_environment": degraded,
+                "noisy_cpu": noisy,
                 "host_cpu_pct": host_cpu,
-                "registry_only": registry_only,
             },
             fh,
             indent=1,
@@ -871,50 +451,27 @@ def main() -> None:
     )
     compact_queries = {n: timings[n] for n in HEADLINE if n in timings}
     compact_queries.update(slowest)
-    # diagnostics-only blocks live in BENCH_FULL; the line stays lean so
-    # the per-query timings survive the 1800-byte budget
-    line_streaming = {
-        k: v
-        for k, v in streaming.items()
-        if k not in ("latency_top_batches", "throughput_trials_rows_per_s")
-    }
     line = {
         "metric": "registry_total_runtime",
         "value": total,
         "unit": "sec",
         "sf": sf_val,
+        "cpus": cpus,
         "n_queries": len(timings),
         "n_errors": len(errors),
         "errors_by_class": {c: names[:3] for c, names in errors_by_class.items()},
-        "n_trial_errors": len(trial_errors),
-        "trial_errors": [e[:120] for e in trial_errors[:2]],
         "stderr_bytes": stderr_bytes,
         "cpu_gauge_s": [gauge_start, gauge_end],
         "mem_gauge_gbps": [mem_gauge_start, mem_gauge_end],
-        "degraded_environment": _degraded_environment(
-            mem_gauge_start, mem_gauge_end
-        ),
-        "noisy_cpu": _noisy_cpu(host_cpu.get("steal_pct")),
+        "degraded_environment": degraded,
+        "noisy_cpu": noisy,
         "steal_pct": host_cpu.get("steal_pct"),
         "queries": compact_queries,
-        "streaming_ysb": line_streaming,
-        "full": os.path.basename(full_path),
+        "full": "BENCH_FULL.json",
     }
-    if scaled:
-        # compact line carries the summary; per-query detail is in FULL
-        line["scaled"] = {k: v for k, v in scaled.items() if k != "batch"}
-        if "history" in line["scaled"]:
-            line["scaled"]["history"] = line["scaled"]["history"][-3:]
     out = json.dumps(line)
     if len(out) > 1800:  # stay inside the driver's 2000-char stdout tail
         line.pop("queries", None)
-        out = json.dumps(line)
-    if len(out) > 1800:
-        line["streaming_ysb"] = {
-            k: v
-            for k, v in line_streaming.items()
-            if not k.startswith(("replay_", "throughput_warmup"))
-        }
         out = json.dumps(line)
     # Tail hygiene: the driver records only a ~2000-char stdout TAIL, so the
     # JSON line must be the last thing any thread writes. BENCH_r02 was

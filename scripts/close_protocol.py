@@ -17,10 +17,14 @@ on (SURVEY §2.10 round amendments). Runs, in order:
                             tr_TR JVM locale — Turkish-I axis)
   7. extreme-value probe    scripts/extreme_value_probe.py (domain-cap
                             power-sum headroom)
+  8. bench artifact         the committed BENCH_FULL.json may be
+                            published: a total, no errors, neither
+                            noise stamp, and cpus equal to this host's
+                            core count (totals at other counts do not
+                            compare)
 
-Bench runs are NOT here: they need a hand-checked gauge (steal %,
-stamps) and their artifacts are recorded with provenance — see
-bench.py and the round records.
+The bench run itself is NOT here: `python bench.py` rewrites
+BENCH_FULL.json, and stage 8 checks the result.
 
 Each stage streams to its own log under --logdir (default
 /tmp/close_r<N>/); a stage failure is recorded and the run CONTINUES
@@ -33,6 +37,7 @@ Usage: python scripts/close_protocol.py [--logdir DIR] [--skip N,M]
 from __future__ import annotations
 
 import argparse
+import json
 import os
 import subprocess
 import sys
@@ -58,6 +63,28 @@ def stages() -> list[tuple[str, list[str], dict[str, str]]]:
         ("locale_sweep", [py, os.path.join(s, "locale_sweep.py"), SF001], {}),
         ("extreme_probe", [py, os.path.join(s, "extreme_value_probe.py")], {}),
     ]
+
+
+def bench_full_problems(path: str, cpus: int) -> list[str]:
+    """Why the bench artifact at ``path`` must not be published; empty
+    when it may be. A missing noise stamp counts as set: an artifact
+    that cannot show a clean host does not pass."""
+    try:
+        with open(path) as fh:
+            full = json.load(fh)
+    except (OSError, ValueError) as exc:
+        return [f"unreadable: {exc!r}"]
+    problems = []
+    if full.get("value") is None:
+        problems.append("value is null")
+    if full.get("errors"):
+        problems.append(f"errors in {sorted(full['errors'])}")
+    for stamp in ("noisy_cpu", "degraded_environment"):
+        if full.get(stamp) is not False:
+            problems.append(f"{stamp} is {full.get(stamp)}")
+    if full.get("cpus") != cpus:
+        problems.append(f"cpus is {full.get('cpus')}, host has {cpus}")
+    return problems
 
 
 def main() -> None:
@@ -86,6 +113,15 @@ def main() -> None:
         status = "PASS" if rc == 0 else f"FAIL(rc={rc})"
         results.append((name, status, dt))
         print(f"== {name}: {status} in {dt:.0f}s", flush=True)
+
+    if "bench_artifact" in skip:
+        status = "SKIPPED"
+    else:
+        problems = bench_full_problems(os.path.join(REPO, "BENCH_FULL.json"),
+                                       len(os.sched_getaffinity(0)))
+        status = "FAIL(" + "; ".join(problems) + ")" if problems else "PASS"
+    results.append(("bench_artifact", status, 0.0))
+    print(f"== bench_artifact: {status}", flush=True)
 
     print("\n==== close protocol summary ====")
     for name, status, dt in results:

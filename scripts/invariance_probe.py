@@ -108,7 +108,7 @@ _VARIANTS = {
 
 class _conf:
     """Scoped conf set/restore — pass B must not leak into pass A of the
-    next query (same discipline as plan_sensitivity_probe)."""
+    next query."""
 
     def __init__(self, spark, kv):
         self.spark = spark

@@ -111,42 +111,6 @@ def _ysb_stream(spark: SparkSession, params: BenchParams) -> DataFrame:
     return ysb_streaming(ev, dim, window=params.window, watermark=params.watermark)
 
 
-def ysb_kafka_stream(
-    spark: SparkSession,
-    params: BenchParams,
-    topic: str,
-    brokers: str,
-    schema,
-) -> DataFrame:
-    """Kafka-sourced twin of _ysb_stream — the consumer of the
-    ``max_offsets_per_trigger`` registry knob (T7: the reference's
-    backpressure pacing rides the Kafka source; the rate generator's
-    analog is rows_per_second, already consumed by _ysb_stream). Gated:
-    raises the clear kafka_gated error without a broker/package.
-
-    ``schema`` is the decoded event payload (user_id/ts/event_type —
-    e.g. the kafka_wire_roundtrip schema); the dim side still comes from
-    the generated campaigns table so the trial measures the stream path.
-    """
-    from streambench_spark.sources.kafka import kafka_stream_source
-
-    ev = kafka_stream_source(
-        spark,
-        topic,
-        brokers,
-        schema=schema,
-        max_offsets_per_trigger=params.max_offsets_per_trigger,
-    )
-    campaigns = gen.gen_campaigns(
-        spark, params.num_campaigns, params.ads_per_campaign
-    )
-    dim = campaigns.select(
-        F.col("ad_id").alias("c_custkey"),
-        F.col("campaign_id").alias("c_mktsegment"),
-    )
-    return ysb_streaming(ev, dim, window=params.window, watermark=params.watermark)
-
-
 def run_throughput_trial(
     spark: SparkSession, params: BenchParams, source: DataFrame | None = None
 ) -> dict:
@@ -201,100 +165,35 @@ def run_latency_trial(
     spark: SparkSession,
     params: BenchParams,
     source: DataFrame | None = None,
-    min_batches: int | None = None,
-    max_duration_s: float | None = None,
-    gc_probe: bool = False,
 ) -> dict:
     """M3: one trial through the latency-marking sink; per-batch latency =
-    arrival wall clock − max event last_update in the batch.
-
-    ``min_batches`` (live source only) keeps the trial running past
-    ``duration_s`` until that many micro-batches are collected, capped at
-    ``max_duration_s`` (default 4x duration_s). Nearest-rank percentiles
-    over n batch samples collapse p95 to max at n <= 20 and p99 to max at
-    n <= 100 — a published tail needs n > 100 for p99 to carry information
-    (the r06 close artifact recorded 39 batches and its whole tail was one
-    sample). ``gc_probe`` stamps cumulative driver-JVM GC time per batch
-    and reports the per-batch GC delta alongside the top latency samples,
-    attributing (or exonerating) GC for tail spikes."""
+    arrival wall clock − max event last_update in the batch. Empty
+    micro-batches (rows == 0) carry no sample."""
     sdf = source if source is not None else _ysb_stream(spark, params)
     collector: list = []
     t0 = time.time()
     q = latency_marking_sink(sdf, collector, mode="update",
-                             available_now=source is not None,
-                             gc_probe=gc_probe)
+                             available_now=source is not None)
     if source is not None:
         ok = q.awaitTermination(params.duration_s + 300)
         if not ok:
             q.stop()
             raise TimeoutError("bounded latency trial did not drain")
     else:
-        cap = max_duration_s if max_duration_s is not None else 4 * params.duration_s
-
-        def _valid() -> int:
-            # count SAMPLES, not raw batches: empty micro-batches (rows
-            # == 0, e.g. trigger fired before new data) contribute no
-            # latency sample, and the percentile math runs on samples —
-            # a 110-batch trial with 10 empty batches is a 100-sample
-            # tail whose nearest-rank p99 collapses onto max again
-            return sum(1 for r in collector if r[1] and r[2] is not None)
-
-        while True:
-            elapsed = time.time() - t0
-            if elapsed >= params.duration_s and (
-                min_batches is None
-                or _valid() >= min_batches
-                or elapsed >= cap
-            ):
-                break
-            time.sleep(0.5)
+        time.sleep(params.duration_s)
         q.stop()
         q.awaitTermination(60)
     total_ms = (time.time() - t0) * 1000
-    # one valid-sample predicate, one pass: valid_pos carries each valid
-    # sample's COLLECTOR position and recs is derived from it, so the
-    # sample list and the GC-attribution positions below cannot drift
-    valid_pos = [
-        i for i, r in enumerate(collector) if r[1] and r[2] is not None
-    ]
-    recs = [collector[i] for i in valid_pos]
-    samples = [r[0] - r[2] for r in recs]
+    samples = [r[0] - r[2] for r in collector if r[1] and r[2] is not None]
     report = latency_report(samples)
     # keys prefixed so t.update() in run_benchmark can't clobber the
     # throughput trial's totalDurationMillis
-    out = {
+    return {
         "latency_total_ms": round(total_ms, 1),
         "latency_batches": len(collector),
         "latency_samples": len(samples),
         **{f"latency_{k}_ms": round(v, 1) for k, v in report.items()},
     }
-    if gc_probe and recs and len(recs[0]) > 3:
-        # per-batch GC delta: GC time accumulated between the previous
-        # MICRO-BATCH's arrival (empty or not — every collector entry
-        # snapshots the GC clock) and this one's ≈ GC during this batch.
-        # Deltas against the immediately preceding collector entry, not
-        # the previous VALID sample, so GC accrued during skipped empty
-        # micro-batches is not mis-attributed to the next valid batch;
-        # `batch` is the real collector position, not the index within
-        # the filtered sample list. The first collector entry has no
-        # prior snapshot (gc_ms null) but still ranks — its startup
-        # latency is often the max and must not vanish from the top list.
-        gc_of = {
-            j: collector[ci][3] - collector[ci - 1][3]
-            for j, ci in enumerate(valid_pos)
-            if ci > 0
-        }
-        ranked = sorted(range(len(recs)), key=lambda i: -samples[i])
-        out["latency_top_batches"] = [
-            {
-                "batch": valid_pos[i],
-                "lat_ms": int(samples[i]),
-                "gc_ms": int(gc_of[i]) if i in gc_of else None,
-            }
-            for i in ranked[:3]
-        ]
-        out["latency_gc_total_ms"] = int(collector[-1][3] - collector[0][3])
-    return out
 
 
 def run_benchmark(

@@ -28,9 +28,8 @@ class BenchParams:
     # query (A1/W1): reference window is 10 s (SparkYahooRunner.scala:75)
     window: str = "10 seconds"
     watermark: str | None = "1 second"
-    # policy knobs (T4/T7)
+    # policy knob (T4)
     trigger_interval_ms: int | None = None  # ≙ flinkTriggerIntervalMillis
-    max_offsets_per_trigger: int | None = None
     # trial duration for unbounded sources
     duration_s: int = 20
 

@@ -120,7 +120,8 @@ def _bloom_posarr_expr(h_col: str, k: int, m_bits: int, hash_mode: str = "md5") 
     hoisting them into a withColumn does not survive optimization), and
     a probe that tests k positions touches each one twice: measured 12
     md5 evaluations per row and 21 s vs 7.6 s for the same 20M-row
-    decontamination (scripts/plan_sensitivity_probe.py trial 5)."""
+    decontamination (SCALE.md, "Plan-sensitivity probe", decontamination
+    trial)."""
     h1 = spark_hash32(f"concat('bf1:', CAST({h_col} AS STRING))", mode=hash_mode)
     h2 = spark_hash32(f"concat('bf2:', CAST({h_col} AS STRING))", mode=hash_mode)
     return (
@@ -164,7 +165,7 @@ def bloom_probe(
     exactly this use) and embedded as an ARRAY LITERAL in a pure Filter
     over the probe scan: no probe-side shuffle, no generate, no join.
     Three measured per-row cost traps shape the implementation (numbers
-    from scripts/plan_sensitivity_probe.py trial 5, 20M rows × 16k
+    from SCALE.md's plan-sensitivity decontamination trial, 20M rows × 16k
     words): (1) the lookup MUST be an array index, not a map — Spark's
     element_at on MapType is a LINEAR key scan, O(m_words) per position
     (59 s as a map); (2) the k position expressions MUST evaluate the two

@@ -177,9 +177,7 @@ def q_stateful_value_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch-boundary-insensitive final answer is max_by(col, n) per
     key — NOT max(col): a cumulative sum over negative values is
     non-monotonic, so max(sum_cents) would pick an intermediate
-    emission. A gated transformWithStateInPandas twin exists
-    (streaming/stateful.py:running_value_stats_tws) for environments with
-    the TWS protobuf client."""
+    emission."""
     from streambench_spark.sources.replay import stream_table
     from streambench_spark.streaming.stateful import running_value_stats
     from streambench_spark.streaming.ysb import run_update_to_parquet

@@ -341,7 +341,7 @@ def q_ysb_trigger_early_fire(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ysb_paced_files_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T7 driver-proof: bounded availableNow drain with the file-source
     backpressure knob (maxFilesPerTrigger=1 — the file analog of Kafka's
-    maxOffsetsPerTrigger, sources/kafka.py): the 8-file replay becomes ~8
+    maxOffsetsPerTrigger): the 8-file replay becomes ~8
     bounded micro-batches instead of one. Update-mode foreachBatch
     parquet drain + per-key max reduction, as above — equal to the batch
     YSB result regardless of pacing."""

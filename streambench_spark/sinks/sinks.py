@@ -55,33 +55,16 @@ def parquet_sink(sdf: DataFrame, path: str) -> StreamingQuery:
     )
 
 
-def jvm_gc_millis(spark) -> int:
-    """Cumulative GC time (ms) across all collectors of the driver JVM,
-    via the JMX GarbageCollectorMXBeans. In local mode the driver JVM IS
-    the executor, so this clock covers the whole pipeline's GC."""
-    beans = (
-        spark._sc._jvm.java.lang.management.ManagementFactory
-        .getGarbageCollectorMXBeans()
-    )
-    return int(sum(beans.get(i).getCollectionTime() for i in range(beans.size())))
-
-
 def latency_marking_sink(
     sdf: DataFrame, collector: list, mode: str = "update",
-    available_now: bool = False, gc_probe: bool = False,
+    available_now: bool = False,
 ) -> StreamingQuery:
     """S10: stamps each micro-batch with arrival time (processing clock)
     and appends (arrival_ms, rows, max_last_update_ms) to ``collector`` —
     the Kafka-free analog of the broker LogAppendTime latency clock.
     The batch is lazy until its aggregate is collected, so the stamp is
     taken after ``collect()`` returns: every record has been produced by
-    then, and ``arrival_ms >= max_last_update_ms`` holds.
-
-    ``gc_probe`` appends a 4th element: the cumulative driver-JVM GC time
-    at batch arrival (jvm_gc_millis). Consecutive differences attribute a
-    latency spike to (or exonerate) GC pauses during that batch — the
-    diagnostic the r06 tail-regression question needs. One py4j call per
-    micro-batch (~ms), off by default."""
+    then, and ``arrival_ms >= max_last_update_ms`` holds."""
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         import time
@@ -91,10 +74,7 @@ def latency_marking_sink(
             F.max("last_update_ms").alias("max_lu"),
         ).collect()[0]
         arrival_ms = int(time.time() * 1000)
-        rec = (arrival_ms, agg["rows"], agg["max_lu"])
-        if gc_probe:
-            rec = rec + (jvm_gc_millis(batch_df.sparkSession),)
-        collector.append(rec)
+        collector.append((arrival_ms, agg["rows"], agg["max_lu"]))
 
     writer = (
         sdf.writeStream.foreachBatch(handle)

@@ -4,9 +4,7 @@ Reference parity:
 - S4 batch Kafka source: the latency-analysis read-back path
   (ysb/benchmark/spark/SparkYahooRunner.scala:127-135 — read the output
   topic as a batch, decode JSON, diff timestamps).
-- Streaming Kafka source with the ``maxOffsetsPerTrigger`` backpressure
-  knob (T7 — the Spark-native analog of the reference's bundle pacing,
-  sbx/UnboundedInMemEvaluator.h:1692-1720).
+- Streaming Kafka source.
 
 This container has no broker and no spark-sql-kafka package, so these
 builders raise a clear RuntimeError at plan time when the integration is
@@ -89,11 +87,9 @@ def kafka_stream_source(
     topic: str,
     brokers: str,
     schema: StructType | None = None,
-    max_offsets_per_trigger: int | None = None,
     starting_offsets: str = "latest",
 ) -> DataFrame:
-    """Streaming Kafka source; ``max_offsets_per_trigger`` bounds each
-    micro-batch (T7 backpressure). With a ``schema`` the JSON value is
+    """Streaming Kafka source. With a ``schema`` the JSON value is
     decoded (broker timestamp kept, same as the batch source)."""
     reader = (
         spark.readStream.format("kafka")
@@ -101,8 +97,6 @@ def kafka_stream_source(
         .option("subscribe", topic)
         .option("startingOffsets", starting_offsets)
     )
-    if max_offsets_per_trigger is not None:
-        reader = reader.option("maxOffsetsPerTrigger", max_offsets_per_trigger)
     raw = kafka_gated(reader.load)
     return (
         decode_json_rows(raw, schema, keep=("timestamp",))

@@ -94,61 +94,3 @@ def running_value_stats(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def running_value_stats_tws(
-    stream: DataFrame, key_col: str = "user_id", value_col: str = "value"
-) -> DataFrame:
-    """Spark 4 ``transformWithStateInPandas`` version of
-    running_value_stats — the successor API (typed ValueState handles,
-    TTL support, timers, RocksDB-backed). Semantics identical.
-
-    Gated: the TWS Python state client needs ``google.protobuf`` and the
-    RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass`` →
-    ``...state.RocksDBStateStoreProvider``); raises ImportError where
-    protobuf is unavailable (this container) — callers fall back to
-    running_value_stats.
-    """
-    from google.protobuf import descriptor  # noqa: F401 — availability gate
-
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class _Agg(StatefulProcessor):
-        def init(self, handle):
-            self._st = handle.getValueState(
-                "agg", "sum_cents long, n long, nn long, max_cents long"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as _pd
-
-            cur = self._st.get()
-            s, n, nn, mx = cur if cur is not None else (0, 0, 0, 0)
-            for pdf in rows:
-                c = pdf["_cents"].dropna()
-                s += int(c.sum())
-                n += len(pdf)
-                if len(c):
-                    bmx = int(c.max())
-                    mx = bmx if nn == 0 else max(mx, bmx)
-                    nn += len(c)
-            self._st.update((s, n, nn, mx))
-            yield _pd.DataFrame(
-                [{key_col: key[0], "sum_cents": s, "n": n,
-                  "max_cents": mx if nn > 0 else None}]
-            )
-
-        def close(self):
-            pass
-
-    pre = stream.select(
-        key_col,
-        F.expr(f"CAST(round({value_col} * 100) AS BIGINT)").alias("_cents"),
-    )
-    return pre.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=_Agg(),
-        outputStructType=f"{key_col} long, sum_cents long, n long, max_cents long",
-        outputMode="Update",
-        timeMode="None",
-    )

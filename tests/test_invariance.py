@@ -148,10 +148,10 @@ def test_dataset_shuffle_order_invariant_and_dense(spark):
 
 
 def test_skew_probe_twins_agree_on_skewed_frame(spark):
-    """bench.py's skew probe times plain vs skew-safe twins on a frame
-    where one user owns ~10% of events; this pins that the twins return
-    IDENTICAL results on that exact skewed frame (timings are only
-    comparable because the answers are equal)."""
+    """The plain and skew-safe twins (groupBy vs salted_grouped_agg,
+    interval_join vs interval_join_banded) return IDENTICAL results on a
+    frame where one user owns ~10% of events — the skew a salted or
+    banded plan exists for, so their timings compare like for like."""
     import pyspark.sql.functions as F
 
     from streambench_spark.catalog import load_table

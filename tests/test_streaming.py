@@ -429,27 +429,6 @@ def test_incremental_mv_merges_across_batches(spark, tmp_path):
     assert got == want
 
 
-def test_tws_variant_gated_on_protobuf(spark):
-    """The transformWithStateInPandas twin requires google.protobuf; in
-    its absence the function must fail fast with ImportError (callers
-    fall back to the applyInPandasWithState path)."""
-    import pytest
-
-    from streambench_spark.sources.replay import stream_table
-    from streambench_spark.streaming.stateful import running_value_stats_tws
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        has_protobuf = True
-    except ImportError:
-        has_protobuf = False
-    stream = stream_table(spark, SF_DIR, "events").select("user_id", "value")
-    if has_protobuf:
-        pytest.skip("protobuf present; TWS covered by the full runtime")
-    with pytest.raises(ImportError):
-        running_value_stats_tws(stream)
-
-
 def test_compact_incremental_mv_preserves_result(spark, tmp_path):
     """Compaction re-aggregates the partials directory down to one file;
     the merged MV answer must be identical before and after, and the
