@@ -47,7 +47,15 @@ def dim_join(
     closure-captured hashmap (Flink StaticJoinMapper, StreamBox
     YahooMapper.do_map) — each task gets the whole dim table, zero shuffle
     of the fact side.
+
+    Against a streaming fact, a static dim is computed once per query:
+    an eager ``localCheckpoint`` snapshot, as the reference caches its
+    campaigns table (SparkYahooRunner.scala:74). Otherwise every
+    micro-batch would re-scan the dim to build its broadcast. A batch
+    fact's plan is left as it is.
     """
+    if fact.isStreaming and not dim.isStreaming:
+        dim = dim.localCheckpoint(eager=True)
     return fact.join(F.broadcast(dim), on, how)
 
 

@@ -17,6 +17,9 @@ from streambench_spark.streaming.ysb import run_streaming_ysb_to_table, run_to_m
 from tests.conftest import SF_DIR
 
 
+_CKPT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+
+
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
@@ -644,7 +647,13 @@ def test_checkpoint_restart_resumes_not_recomputes(spark, tmp_path):
     The first drains half the files; more files arrive; the second run
     must process ONLY the new files (offset log resume) while its state
     store carries the first run's counts forward — the reduced emissions
-    equal the batch aggregate over everything."""
+    equal the batch aggregate over everything. The offsets, commits and
+    state deltas are written and read back through the session's
+    FileSystem-based checkpoint manager, with checksum files on."""
+    from streambench_spark.session import CHECKPOINT_FILE_MANAGER
+
+    assert spark.conf.get(_CKPT_MANAGER_KEY) == CHECKPOINT_FILE_MANAGER
+    assert spark.conf.get("spark.sql.streaming.checkpoint.fileChecksum.enabled") == "true"
     src = str(tmp_path / "src")
     ckpt = str(tmp_path / "ckpt")
     out = str(tmp_path / "out")
@@ -1003,3 +1012,84 @@ def test_no_data_batch_conf_restored(spark):
     with _pinned_no_data_batch(spark, enabled=False):
         assert spark.conf.get(key) == "false"
     assert spark.conf.get(key, None) == before
+
+
+def test_get_spark_sets_checkpoint_manager_on_existing_session(spark):
+    """A session that existed before get_spark (here: one whose setting
+    was dropped) gets the FileSystem-based checkpoint manager too."""
+    from streambench_spark.session import CHECKPOINT_FILE_MANAGER, get_spark
+
+    spark.conf.unset(_CKPT_MANAGER_KEY)
+    assert spark.conf.get(_CKPT_MANAGER_KEY, None) != CHECKPOINT_FILE_MANAGER
+    again = get_spark(app_name="streambench-tests",
+                      shuffle_partitions=int(spark.conf.get("spark.sql.shuffle.partitions")))
+    assert again is spark
+    assert spark.conf.get(_CKPT_MANAGER_KEY) == CHECKPOINT_FILE_MANAGER
+
+
+def _build_counting_jobs(spark, build):
+    """``build()``'s result and the ids of the Spark jobs it started."""
+    sc = spark.sparkContext
+    group = f"build-{id(build)}"
+    sc.setJobGroup(group, "jobs started while building a plan")
+    try:
+        df = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return df, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _explain(df) -> str:
+    import re
+
+    text = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "simple")
+    return re.sub(r"plan_id=\d+", "plan_id=_", text)
+
+
+def _customer_dim(spark):
+    return load_table(spark, SF_DIR, "customer").select(
+        F.col("c_custkey").alias("user_id"), "c_mktsegment")
+
+
+def test_with_index_is_a_snapshot(spark):
+    """The replay lookup's index sort runs once, in with_index: its plan
+    holds no Window, and idx is the dense 0..N-1 order of order_col."""
+    from streambench_spark.sources.replay import with_index
+
+    ev = load_table(spark, SF_DIR, "events").select("event_id", "user_id")
+    lookup = with_index(ev, "event_id")
+    assert "Window" not in lookup._jdf.queryExecution().optimizedPlan().toString()
+    got = [(r["idx"], r["event_id"]) for r in lookup.orderBy("idx").collect()]
+    ids = sorted(r["event_id"] for r in ev.collect())
+    assert got == list(enumerate(ids))
+
+
+def test_dim_join_streaming_fact_broadcasts_snapshot(spark):
+    """Against a streaming fact, dim_join snapshots the static dim once,
+    while the plan is built: no file scan under its BroadcastExchange."""
+    from streambench_spark.operators.relational import dim_join
+
+    fact = stream_table(spark, SF_DIR, "events").select("user_id", "ts")
+    joined, jobs = _build_counting_jobs(
+        spark, lambda: dim_join(fact, _customer_dim(spark), ["user_id"]))
+    assert jobs, "the snapshot is eager"
+    text = _explain(joined)
+    assert "StreamingRelation" in text
+    build_side = text.split("BroadcastExchange", 1)[1]
+    assert "Scan ExistingRDD" in build_side
+    assert "FileScan" not in build_side
+
+
+def test_dim_join_batch_fact_plan_unchanged(spark):
+    """A batch fact's dim_join is the plain broadcast join, built lazily."""
+    from pyspark.sql.functions import broadcast
+
+    from streambench_spark.operators.relational import dim_join
+
+    fact = load_table(spark, SF_DIR, "events").select("user_id", "ts")
+    dim = _customer_dim(spark)
+    joined, jobs = _build_counting_jobs(
+        spark, lambda: dim_join(fact, dim, ["user_id"], "left"))
+    assert jobs == []
+    assert _explain(joined) == _explain(fact.join(broadcast(dim), ["user_id"], "left"))
