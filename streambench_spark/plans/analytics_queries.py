@@ -132,10 +132,11 @@ def q_asof_join_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=["streaming", "stateful"],
 )
 def q_stateful_running_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful operator (applyInPandasWithState): per-key running
-    count through GroupState, drained with availableNow. The emitted
-    totals are cumulative and monotonic, so max(n) per key == the batch
-    count regardless of how many micro-batches the replay used."""
+    """Custom stateful operator (applyInPandasWithState): per-(user,
+    event_type) running count through GroupState, drained with
+    availableNow. The emitted totals are cumulative and monotonic, so
+    max(n) per key == the batch count regardless of how many
+    micro-batches the replay used."""
     from streambench_spark.sources.replay import stream_table
     from streambench_spark.streaming.stateful import running_counts
     from streambench_spark.streaming.ysb import run_update_to_parquet
@@ -145,17 +146,9 @@ def q_stateful_running_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream, ["user_id", "event_type"],
         "user_id long, event_type string, n long",
     )
-    # Python-state work (one GroupState call per key) parallelizes to
-    # cluster width, unlike the JVM state stores where per-partition
-    # setup dominates at this scale: the r16 interleaved A/B read
-    # medians 2.88 s at 8 / 2.17 at 16 / 2.01 at 32 partitions on
-    # local[32], so this drain sizes its state layout to the session's
-    # parallelism (floored at the 8 every other drain keeps — an
-    # 8-core run is unchanged). Results are partition-count-independent.
-    emitted = run_update_to_parquet(
-        spark, counted,
-        state_partitions=max(8, spark.sparkContext.defaultParallelism),
-    )
+    # State is one GroupState per user (1.5k groups, not 7.5k at ~2 ms
+    # each) on one state partition per core; results depend on neither.
+    emitted = run_update_to_parquet(spark, counted)
     return emitted.groupBy("user_id", "event_type").agg(F.max("n").alias("n"))
 
 
@@ -184,7 +177,7 @@ def q_stateful_value_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = stream_table(spark, sf_dir, "events").select("user_id", "value")
     stats = running_value_stats(stream)
-    emitted = run_update_to_parquet(spark, stats, state_partitions=8)
+    emitted = run_update_to_parquet(spark, stats)
     return emitted.groupBy("user_id").agg(
         F.expr("max_by(sum_cents, n)").alias("sum_cents"),
         F.max("n").alias("n"),
@@ -238,7 +231,7 @@ def q_hypertable_rollup_streaming(spark: SparkSession, sf_dir: str) -> DataFrame
         F.unix_millis(F.col("window.start")).alias("bucket_ms"),
         "event_type", "n_events", "sum_cents",
     )
-    return run_append_to_parquet(spark, out, state_partitions=8)
+    return run_append_to_parquet(spark, out)
 
 
 @register(
@@ -474,8 +467,7 @@ def q_sliding_window_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.unix_millis("w.start").alias("window_start"), "n")
     )
-    _, table = run_to_memory(agg, mode="complete", available_now=True,
-                             state_partitions=8)
+    _, table = run_to_memory(agg, mode="complete", available_now=True)
     cutoff_ms = 1704024000000  # 2023-12-31 12:00:00 UTC (partial first window)
     return spark.table(table).filter(F.col("window_start") > cutoff_ms)
 
@@ -533,7 +525,7 @@ def q_session_windows_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    return run_append_to_parquet(spark, agg, state_partitions=8)
+    return run_append_to_parquet(spark, agg)
 
 
 @register(
@@ -553,7 +545,7 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = stream_table(spark, sf_dir, "events").select("user_id", "event_type")
     deduped = stream.dropDuplicates(["user_id", "event_type"])
 
-    return run_append_to_parquet(spark, deduped, state_partitions=8)
+    return run_append_to_parquet(spark, deduped)
 
 
 @register(
@@ -682,7 +674,7 @@ def q_streaming_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> Data
     # trailing no-data batch only evicts expired dedup state and emits
     # nothing — skip it (r16, ~0.7 s of state-store commit cycle).
     return run_append_to_parquet(
-        spark, deduped, state_partitions=8, final_no_data_batch=False
+        spark, deduped, final_no_data_batch=False
     ).select("user_id", "event_type")
 
 
@@ -1682,7 +1674,7 @@ def q_cdc_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("chg"),
     )
     latest = stream.groupBy("user_id").agg(F.max("chg").alias("m"))
-    emissions = run_update_to_parquet(spark, latest, state_partitions=8)
+    emissions = run_update_to_parquet(spark, latest)
     return (
         emissions.groupBy("user_id")
         .agg(F.max("m").alias("m"))
@@ -3464,7 +3456,7 @@ def q_cdc_with_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("chg"),
     )
     latest = stream.groupBy("user_id").agg(F.max("chg").alias("m"))
-    emissions = run_update_to_parquet(spark, latest, state_partitions=8)
+    emissions = run_update_to_parquet(spark, latest)
     return (
         emissions.groupBy("user_id")
         .agg(F.max("m").alias("m"))

@@ -1325,7 +1325,7 @@ def q_streaming_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("doc_id").alias("canonical_doc_id"),
         F.count(F.lit(1)).alias("n_docs"),
     )
-    emissions = run_update_to_parquet(spark, agg, state_partitions=8)
+    emissions = run_update_to_parquet(spark, agg)
     return emissions.groupBy("sig_key").agg(
         F.min("canonical_doc_id").alias("canonical_doc_id"),
         F.max("n_docs").alias("n_docs"),

@@ -86,9 +86,6 @@ def q_ysb_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_streaming_ysb_to_table(
         spark, events_stream, customer, window="1 hour", watermark=None,
         mode="complete",
-        # state stores sized to the key cardinality (~2k window-segment
-        # groups), not the batch shuffle default
-        state_partitions=8,
     )
 
 
@@ -309,7 +306,6 @@ def q_ysb_streaming_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "customer"),
         window="1 hour",
         watermark="1 second",
-        state_partitions=8,
     )
 
 
@@ -329,7 +325,7 @@ def q_ysb_trigger_early_fire(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = stream_table_multifile(spark, sf_dir, "events", n_files=8)
     out = ysb_query(stream, load_table(spark, sf_dir, "customer"), window="1 hour")
     emissions = run_update_with_interval_trigger(
-        spark, out, expected_rows=total, trigger_ms=150, state_partitions=8
+        spark, out, expected_rows=total, trigger_ms=150
     )
     return emissions.groupBy("time_window", "segment").agg(
         F.max("count").alias("count"),
@@ -352,7 +348,7 @@ def q_ysb_paced_files_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "events", n_files=8, max_files_per_trigger=1
     )
     out = ysb_query(stream, load_table(spark, sf_dir, "customer"), window="1 hour")
-    emissions = run_update_to_parquet(spark, out, state_partitions=8)
+    emissions = run_update_to_parquet(spark, out)
     return emissions.groupBy("time_window", "segment").agg(
         F.max("count").alias("count"),
         F.max("last_update_ms").alias("last_update_ms"),
@@ -452,8 +448,7 @@ def q_interval_join_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     # emits nothing (r16 measured it at 1.2-1.6 s of pure state-store
     # commit cycle) — skip it. The outer-join twins MUST keep it: their
     # null-padded rows emit exactly when the watermark closes a band.
-    return run_append_to_parquet(spark, joined, state_partitions=8,
-                                 final_no_data_batch=False)
+    return run_append_to_parquet(spark, joined, final_no_data_batch=False)
 
 
 @register(
@@ -504,7 +499,7 @@ def q_interval_join_left_outer_streaming(spark: SparkSession, sf_dir: str) -> Da
         F.coalesce(F.col("r.event_id"), F.lit(-1)).alias("purchase_id"),
         F.col("l.user_id").alias("user_id"),
     )
-    return run_append_to_parquet(spark, joined, state_partitions=8)
+    return run_append_to_parquet(spark, joined)
 
 
 @register(
@@ -1126,7 +1121,7 @@ def q_interval_join_full_outer_streaming(spark: SparkSession, sf_dir: str) -> Da
         F.coalesce(F.col("r.event_id"), F.lit(-1)).alias("purchase_id"),
         F.coalesce(F.col("l.user_id"), F.col("r.user_id")).alias("user_id"),
     )
-    return run_append_to_parquet(spark, joined, state_partitions=8)
+    return run_append_to_parquet(spark, joined)
 
 
 def _dynamic_gap_oracle(streaming: bool = False) -> str:
@@ -1351,7 +1346,7 @@ def q_session_windows_dynamic_gap_streaming(
             "n_events",
         )
     )
-    return run_append_to_parquet(spark, agg, state_partitions=8)
+    return run_append_to_parquet(spark, agg)
 
 
 @register(

@@ -31,7 +31,7 @@ CHECKPOINT_FILE_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing."
     "FileSystemBasedCheckpointFileManager"
 )
-_CHECKPOINT_FILE_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+CHECKPOINT_FILE_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
 
 
 def get_spark(
@@ -81,7 +81,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.shuffle.spill.compress", "true")
-        .config(_CHECKPOINT_FILE_MANAGER_KEY, CHECKPOINT_FILE_MANAGER)
+        .config(CHECKPOINT_FILE_MANAGER_KEY, CHECKPOINT_FILE_MANAGER)
         # Pin the JVM default locale: Spark's plain lower()/upper() read
         # it on the non-ASCII slow path (Turkish-I class — see
         # llm/hashing.locale_free_lower_sql, which fixes the plans
@@ -106,7 +106,7 @@ def get_spark(
         "spark.sql.session.timeZone": "UTC",
         "spark.sql.legacy.parquet.nanosAsLong": "true",
         "spark.sql.adaptive.enabled": "true",
-        _CHECKPOINT_FILE_MANAGER_KEY: CHECKPOINT_FILE_MANAGER,
+        CHECKPOINT_FILE_MANAGER_KEY: CHECKPOINT_FILE_MANAGER,
         "spark.sql.adaptive.coalescePartitions.minPartitionSize":
             os.environ.get("SPARK_GRAFT_MIN_PARTITION_SIZE", "64KB"),
     }

@@ -6,6 +6,15 @@ windowed/dedup operators can't express).
 Scale posture: state lives in the executor state store partitioned by the
 grouping key (same sharding as the built-in aggregates); each micro-batch
 touches only the keys present in that batch, Arrow-batched per group.
+
+Cost model: every group a micro-batch touches costs about 2 ms of Python
+worker time however few rows it holds (1.85-2.2 ms measured on a 4-core
+host, task gaps excluded). Nearly all of it is PySpark's per-group
+serializer work — Arrow slicing, the pandas conversion, the GroupState
+JSON and pickle, a one-row state frame — not the user function. So the
+number of groups, not the number of rows, sets the cost: key state on
+the coarsest key the logic allows (``running_counts`` keys on the outer
+key and keeps the finer counts inside one state).
 """
 
 from __future__ import annotations
@@ -13,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupStateTimeout
+
+_INTEGRAL = {"tinyint", "smallint", "int", "bigint"}
 
 
 def running_counts(
@@ -22,27 +33,51 @@ def running_counts(
 
     Emits one row per (key, batch-with-arrivals) carrying the cumulative
     total so far — the running-counter shape the reference's Flink trigger
-    keeps in ValueState (YahooBenchmark.scala:80-85). The closure is
+    keeps in ValueState (YahooBenchmark.scala:80-85). ``out_schema`` names
+    ``keys`` then ``n``.
+
+    State is keyed on the outer keys (``keys[:-1]``, at least one): one
+    GroupState per outer key holds the last key's running counts as two
+    parallel arrays, values and counts (arrays, not a map, because a map
+    cannot hold a null key). Each group costs a fixed ~2 ms of PySpark
+    per-group work (module docstring), so per-user state over 5 event
+    types makes 5x fewer groups than per-(user, event_type) state would;
+    the emitted rows are the same: one per last-key value that arrived
+    in the batch, with its cumulative ``n``. The closure is
     self-contained (no module globals) so executors need no package on
     their PYTHONPATH.
     """
+    outer, last = keys[:-1], keys[-1]
+    if not outer:
+        raise ValueError("running_counts needs at least two keys")
+    elem = stream.schema[last].dataType.simpleString()
+    # null arrives as None or NaN; pandas widens a nullable integral
+    # column to float64
+    as_int = elem in _INTEGRAL
 
     def _count(key, pdfs, state):
+        import collections as _co
+
         import pandas as _pd
 
-        total = state.get[0] if state.exists else 0
+        arrived = {}
         for pdf in pdfs:
-            total += len(pdf)
-        state.update((total,))
-        yield _pd.DataFrame([{**dict(zip([f"k{i}" for i in range(len(key))], key)),
-                              "n": total}]).rename(
-            columns={f"k{i}": k for i, k in enumerate(keys)}
-        )
+            for v, c in _co.Counter(pdf[last].tolist()).items():
+                v = None if v is None or v != v else int(v) if as_int else v
+                arrived[v] = arrived.get(v, 0) + c
+        totals = dict(zip(*state.get)) if state.exists else {}
+        for v, c in arrived.items():
+            totals[v] = totals.get(v, 0) + c
+        state.update((list(totals), list(totals.values())))
+        out = {k: [v] * len(arrived) for k, v in zip(outer, key)}
+        out[last] = list(arrived)
+        out["n"] = [totals[v] for v in arrived]
+        yield _pd.DataFrame(out)
 
-    return stream.groupBy(*keys).applyInPandasWithState(
+    return stream.groupBy(*outer).applyInPandasWithState(
         _count,
         outputStructType=out_schema,
-        stateStructType="n long",
+        stateStructType=f"vals array<{elem}>, cnts array<bigint>",
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )

@@ -16,6 +16,7 @@ surface (SURVEY.md §2.7):
 
 from __future__ import annotations
 
+import shutil
 import tempfile
 import uuid
 from contextlib import contextmanager
@@ -51,6 +52,7 @@ def start_query(
     trigger_interval_ms: int | None = None,
     query_name: str | None = None,
     options: dict[str, str] | None = None,
+    checkpoint: str | None = None,
 ) -> StreamingQuery:
     """Generic query starter exposing the reference's emission-policy knobs.
 
@@ -59,9 +61,11 @@ def start_query(
       trigger cadence for unbounded runs.
     - ``available_now`` drains bounded input then stops (the deterministic
       replay policy). Mutually exclusive with the interval trigger.
+    - ``checkpoint`` is the checkpoint directory; by default a fresh
+      temp directory that outlives the query.
     """
     writer = sdf.writeStream.format(fmt).outputMode(mode).option(
-        "checkpointLocation", tempfile.mkdtemp(prefix="sb_ckpt_")
+        "checkpointLocation", checkpoint or tempfile.mkdtemp(prefix="sb_ckpt_")
     )
     if query_name:
         writer = writer.queryName(query_name)
@@ -110,16 +114,20 @@ def _pinned_no_data_batch(spark: SparkSession, enabled: bool):
 
 @contextmanager
 def _pinned_state_partitions(spark: SparkSession, n: int | None):
-    """Temporarily pin spark.sql.shuffle.partitions for a bounded
-    streaming run. A stateful query's state-store count is fixed at the
-    first checkpoint, so it is a per-workload choice (sized to key
-    cardinality and cluster width), not something to inherit from the
-    batch default — the reference exposes the same knob as
-    ``sparkParallelism`` (SparkYahooRunner.scala:69). Restored after the
-    drained run, so surrounding batch queries are unaffected."""
+    """Pin spark.sql.shuffle.partitions for a bounded streaming run — the
+    one state-partition policy every drain goes through. A stateful
+    query's state-store count is fixed at its first checkpoint, and each
+    state partition pays a fixed per-batch cost (store load, commit, a
+    task), so the count follows the cluster, not the batch default:
+    ``n=None`` means ``spark.sparkContext.defaultParallelism``, one
+    partition per core and a single task wave (on a 4-core host, 8
+    partitions in two waves made the three registry_mix drains 26-30%
+    slower, and 2 was no faster than 4). The reference exposes the same
+    knob as ``sparkParallelism`` (SparkYahooRunner.scala:69); pass ``n``
+    only to pin a count on purpose. Restored after the drained run, so
+    surrounding batch queries are unaffected."""
     if n is None:
-        yield
-        return
+        n = spark.sparkContext.defaultParallelism
     key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key)
     spark.conf.set(key, str(n))
@@ -127,6 +135,18 @@ def _pinned_state_partitions(spark: SparkSession, n: int | None):
         yield
     finally:
         spark.conf.set(key, old)
+
+
+@contextmanager
+def _drain_checkpoint():
+    """A private checkpoint directory for one bounded drain, removed once
+    the drain is over: nothing reads it after the query terminates (the
+    result is read from the memory table or the output path)."""
+    path = tempfile.mkdtemp(prefix="sb_ckpt_")
+    try:
+        yield path
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
 
 
 def run_to_memory(
@@ -139,12 +159,15 @@ def run_to_memory(
     """Run a streaming DataFrame to a memory sink; returns (query, table).
 
     availableNow drains all available input then stops — the deterministic
-    replay path used by tests and the driver-facing streaming queries."""
+    replay path used by tests and the registry's streaming queries.
+    A drained run's checkpoint is removed; a running query keeps its own."""
     name = f"mem_{uuid.uuid4().hex[:12]}"
     with _pinned_state_partitions(sdf.sparkSession, state_partitions):
-        q = start_query(sdf, fmt="memory", mode=mode, available_now=available_now,
-                        query_name=name)
-        if available_now:
+        if not available_now:
+            return start_query(sdf, fmt="memory", mode=mode, query_name=name), name
+        with _drain_checkpoint() as ckpt:
+            q = start_query(sdf, fmt="memory", mode=mode, available_now=True,
+                            query_name=name, checkpoint=ckpt)
             # awaitTermination returns False on timeout — an incomplete run
             # must not masquerade as the final state.
             if not q.awaitTermination(timeout_s):
@@ -198,9 +221,10 @@ def run_append_to_parquet(
     outer joins must keep the default."""
     path = tempfile.mkdtemp(prefix="sb_append_out_")
     with _pinned_state_partitions(spark, state_partitions), \
-            _pinned_no_data_batch(spark, final_no_data_batch):
+            _pinned_no_data_batch(spark, final_no_data_batch), \
+            _drain_checkpoint() as ckpt:
         q = start_query(out, fmt="parquet", mode="append", available_now=True,
-                        options={"path": path})
+                        options={"path": path}, checkpoint=ckpt)
         if not q.awaitTermination(timeout_s):
             q.stop()
             raise TimeoutError(f"append-mode run exceeded {timeout_s}s")
@@ -226,11 +250,12 @@ def run_update_to_parquet(
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").parquet(path)
 
-    with _pinned_state_partitions(spark, state_partitions):
+    with _pinned_state_partitions(spark, state_partitions), \
+            _drain_checkpoint() as ckpt:
         q = (
             out.writeStream.foreachBatch(handle)
             .outputMode("update")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="sb_ckpt_"))
+            .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
         )
@@ -325,11 +350,12 @@ def run_update_with_interval_trigger(
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").parquet(path)
 
-    with _pinned_state_partitions(spark, state_partitions):
+    with _pinned_state_partitions(spark, state_partitions), \
+            _drain_checkpoint() as ckpt:
         q = (
             out.writeStream.foreachBatch(handle)
             .outputMode("update")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="sb_ckpt_"))
+            .option("checkpointLocation", ckpt)
             .trigger(processingTime=f"{trigger_ms} milliseconds")
             .start()
         )

@@ -1093,3 +1093,131 @@ def test_dim_join_batch_fact_plan_unchanged(spark):
         spark, lambda: dim_join(fact, dim, ["user_id"], "left"))
     assert jobs == []
     assert _explain(joined) == _explain(fact.join(broadcast(dim), ["user_id"], "left"))
+
+
+def test_ensure_session_confs_sets_checkpoint_manager(spark):
+    """A session the program did not create (a caller's own, a bare
+    oracle-check session) gets the FileSystem-based checkpoint manager
+    from the conf pass every table load runs."""
+    from streambench_spark.session import CHECKPOINT_FILE_MANAGER
+
+    spark.conf.unset(_CKPT_MANAGER_KEY)
+    assert spark.conf.get(_CKPT_MANAGER_KEY, None) != CHECKPOINT_FILE_MANAGER
+    load_table(spark, SF_DIR, "customer")
+    assert spark.conf.get(_CKPT_MANAGER_KEY) == CHECKPOINT_FILE_MANAGER
+
+
+def test_bounded_drains_remove_their_checkpoint(spark, tmp_path, monkeypatch):
+    """An append drain and an update drain leave no sb_ckpt_* directory
+    behind; their output directories stay (the result reads them)."""
+    import tempfile
+
+    from streambench_spark.streaming.ysb import run_append_to_parquet, run_update_to_parquet
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    ev = stream_table(spark, SF_DIR, "events")
+    appended = run_append_to_parquet(spark, ev.select("event_id"))
+    counted = run_update_to_parquet(spark, ev.groupBy("event_type").count())
+    assert appended.count() == load_table(spark, SF_DIR, "events").count()
+    assert counted.count() > 0
+    left = sorted(p.name for p in tmp_path.iterdir())
+    assert not [n for n in left if n.startswith("sb_ckpt_")], left
+    assert [n for n in left if n.startswith("sb_append_out_")]
+    assert [n for n in left if n.startswith("sb_update_out_")]
+
+
+def test_running_counts_across_batches_with_nulls(spark, tmp_path, monkeypatch):
+    """running_counts over a 3-batch drain whose rows hold a null user_id
+    and a null event_type: max(n) per (user_id, event_type) is the batch
+    count, and no batch emits a pair twice."""
+    import tempfile
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from streambench_spark.sources.replay import stream_table_multifile
+    from streambench_spark.streaming.stateful import running_counts
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    users = [1, 2, None, 1, 2, 1]
+    types = ["view", None, "click", "view", "click", None, "cart"]
+    n = 42
+    pq.write_table(pa.table({
+        "event_id": pa.array(range(n), pa.int64()),
+        "ts": pa.array([1_704_067_200_000_000 + i for i in range(n)], pa.timestamp("us")),
+        "user_id": pa.array([users[i % len(users)] for i in range(n)], pa.int64()),
+        "event_type": pa.array([types[i % len(types)] for i in range(n)], pa.string()),
+        "value": pa.array([1.0] * n, pa.float64()),
+    }), str(tmp_path / "events.parquet"))
+    stream = stream_table_multifile(
+        spark, str(tmp_path), "events", n_files=3, max_files_per_trigger=1
+    ).select("user_id", "event_type")
+    counted = running_counts(stream, ["user_id", "event_type"],
+                             "user_id long, event_type string, n long")
+    batches = []
+    q = (
+        counted.writeStream.foreachBatch(
+            lambda bdf, _bid: batches.append([tuple(r) for r in bdf.collect()]))
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120)
+    assert len([b for b in batches if b]) >= 3
+    for rows in batches:
+        pairs = [(u, e) for u, e, _ in rows]
+        assert len(pairs) == len(set(pairs))
+    final = {}
+    for rows in batches:
+        for u, e, c in rows:
+            final[(u, e)] = max(c, final.get((u, e), 0))
+    want = {
+        (r["user_id"], r["event_type"]): r["count"]
+        for r in load_table(spark, str(tmp_path), "events")
+        .groupBy("user_id", "event_type").count().collect()
+    }
+    assert (None, "click") in want and (1, None) in want
+    assert final == want
+
+
+def test_drain_state_partitions_follow_default_parallelism(spark):
+    """A drain called without state_partitions runs its state operator on
+    defaultParallelism shuffle partitions (the one policy), and the
+    session's spark.sql.shuffle.partitions is restored afterwards."""
+    import time
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class StateParts(StreamingQueryListener):
+        def __init__(self):
+            self.parts, self.done = {}, set()
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            for op in event.progress.stateOperators:
+                self.parts.setdefault(str(event.progress.id), set()).add(
+                    op.numShufflePartitions)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            self.done.add(str(event.id))
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    listener = StateParts()
+    spark.streams.addListener(listener)
+    try:
+        agg = stream_table(spark, SF_DIR, "events").groupBy("event_type").count()
+        q, _ = run_to_memory(agg, mode="complete")
+        deadline = time.time() + 30
+        while str(q.id) not in listener.done and time.time() < deadline:
+            time.sleep(0.1)
+    finally:
+        spark.streams.removeListener(listener)
+    assert listener.parts[str(q.id)] == {spark.sparkContext.defaultParallelism}
+    assert spark.conf.get(key) == before
