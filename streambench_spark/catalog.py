@@ -14,10 +14,7 @@ from collections import OrderedDict
 from pyspark.sql import DataFrame, SparkSession
 
 from streambench_spark.schemas import TESTDATA_TABLES
-from streambench_spark.session import (
-    CHECKPOINT_FILE_MANAGER,
-    CHECKPOINT_FILE_MANAGER_KEY,
-)
+from streambench_spark.session import RUNTIME_CONFS
 
 # Single source of the default data dir (the driver's correctness SF);
 # the bench keeps its own sf0.1 default — benchmarking SF is a different
@@ -26,23 +23,15 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR") or "/root/testdata/sf0.01"
 
 
 def _ensure_session_confs(spark: SparkSession) -> None:
-    """Apply runtime-settable confs on the CALLER's session.
+    """Apply ``session.RUNTIME_CONFS`` on the CALLER's session.
 
     The driver invokes queries with its own SparkSession (not our
     ``session.get_spark``), so confs the queries rely on must be applied
     here, not only in the session factory. All are runtime-settable SQL
     confs (verified: ``spark.conf.set`` takes effect for subsequent reads).
-
-    - nanosAsLong: events.parquet stores TIMESTAMP(NANOS); Spark has no ns
-      timestamp type, so read the column as a raw ns long and convert.
-    - UTC session timezone: oracle comparisons use epoch-ms arithmetic.
-    - the FileSystem-based streaming checkpoint manager: without it every
-      checkpoint file a drain writes costs 38-47 ms instead of 11 ms
-      (``session.CHECKPOINT_FILE_MANAGER``).
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set(CHECKPOINT_FILE_MANAGER_KEY, CHECKPOINT_FILE_MANAGER)
+    for k, v in RUNTIME_CONFS.items():
+        spark.conf.set(k, v)
 
 
 def _normalize_events_ts(df: DataFrame) -> DataFrame:

@@ -147,7 +147,8 @@ def q_stateful_running_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id long, event_type string, n long",
     )
     # State is one GroupState per user (1.5k groups, not 7.5k at ~2 ms
-    # each) on one state partition per core; results depend on neither.
+    # each) on the drains' one state-partition policy; results depend on
+    # neither.
     emitted = run_update_to_parquet(spark, counted)
     return emitted.groupBy("user_id", "event_type").agg(F.max("n").alias("n"))
 

@@ -31,7 +31,20 @@ CHECKPOINT_FILE_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing."
     "FileSystemBasedCheckpointFileManager"
 )
-CHECKPOINT_FILE_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+
+# Runtime-settable confs every query relies on, whoever created the
+# session: ``get_spark`` sets them, and ``catalog._ensure_session_confs``
+# applies them to a session the program did not create (the driver's).
+# - nanosAsLong: testdata events.parquet stores TIMESTAMP(NANOS); Spark
+#   has no ns timestamp type, so read it as long and convert in the
+#   catalog.
+# - UTC session timezone: oracle comparisons use epoch-ms arithmetic.
+# - the streaming checkpoint manager above.
+RUNTIME_CONFS = {
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.streaming.checkpointFileManagerClass": CHECKPOINT_FILE_MANAGER,
+}
 
 
 def get_spark(
@@ -53,7 +66,7 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
-        .config("spark.sql.session.timeZone", "UTC")
+        .config(map=RUNTIME_CONFS)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # Lower the post-shuffle coalescing FLOOR (default 1MB) so
@@ -75,13 +88,9 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.sql.parquet.filterPushdown", "true")
-        # testdata events.parquet stores TIMESTAMP(NANOS); Spark has no ns
-        # timestamp type — read as long and convert in the catalog.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.shuffle.spill.compress", "true")
-        .config(CHECKPOINT_FILE_MANAGER_KEY, CHECKPOINT_FILE_MANAGER)
         # Pin the JVM default locale: Spark's plain lower()/upper() read
         # it on the non-ASCII slow path (Turkish-I class — see
         # llm/hashing.locale_free_lower_sql, which fixes the plans
@@ -103,10 +112,8 @@ def get_spark(
     # explicitly requested) so they take effect regardless of who created
     # the session first.
     reapply = {
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
+        **RUNTIME_CONFS,
         "spark.sql.adaptive.enabled": "true",
-        CHECKPOINT_FILE_MANAGER_KEY: CHECKPOINT_FILE_MANAGER,
         "spark.sql.adaptive.coalescePartitions.minPartitionSize":
             os.environ.get("SPARK_GRAFT_MIN_PARTITION_SIZE", "64KB"),
     }

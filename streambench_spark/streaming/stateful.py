@@ -23,8 +23,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupStateTimeout
 
-_INTEGRAL = {"tinyint", "smallint", "int", "bigint"}
-
 
 def running_counts(
     stream: DataFrame, keys: list[str], out_schema: str
@@ -39,32 +37,31 @@ def running_counts(
     State is keyed on the outer keys (``keys[:-1]``, at least one): one
     GroupState per outer key holds the last key's running counts as two
     parallel arrays, values and counts (arrays, not a map, because a map
-    cannot hold a null key). Each group costs a fixed ~2 ms of PySpark
-    per-group work (module docstring), so per-user state over 5 event
-    types makes 5x fewer groups than per-(user, event_type) state would;
-    the emitted rows are the same: one per last-key value that arrived
-    in the batch, with its cumulative ``n``. The closure is
-    self-contained (no module globals) so executors need no package on
-    their PYTHONPATH.
+    cannot hold a null key). The last key must be a string column: its
+    values reach the function through pandas, which keeps a string or a
+    null exact but widens a nullable integral column to float64 and
+    cannot tell a double NaN from null (Spark groups them apart). Each
+    group costs a fixed ~2 ms of PySpark per-group work (module
+    docstring), so per-user state over 5 event types makes 5x fewer
+    groups than per-(user, event_type) state would; the emitted rows are
+    the same: one per last-key value that arrived in the batch, with its
+    cumulative ``n``. The closure is self-contained (no module globals)
+    so executors need no package on their PYTHONPATH.
     """
     outer, last = keys[:-1], keys[-1]
     if not outer:
         raise ValueError("running_counts needs at least two keys")
-    elem = stream.schema[last].dataType.simpleString()
-    # null arrives as None or NaN; pandas widens a nullable integral
-    # column to float64
-    as_int = elem in _INTEGRAL
+    if stream.schema[last].dataType.simpleString() != "string":
+        raise ValueError(f"running_counts needs a string last key, got {last!r}")
 
     def _count(key, pdfs, state):
         import collections as _co
 
         import pandas as _pd
 
-        arrived = {}
+        arrived = _co.Counter()
         for pdf in pdfs:
-            for v, c in _co.Counter(pdf[last].tolist()).items():
-                v = None if v is None or v != v else int(v) if as_int else v
-                arrived[v] = arrived.get(v, 0) + c
+            arrived.update(pdf[last].tolist())
         totals = dict(zip(*state.get)) if state.exists else {}
         for v, c in arrived.items():
             totals[v] = totals.get(v, 0) + c
@@ -77,7 +74,7 @@ def running_counts(
     return stream.groupBy(*outer).applyInPandasWithState(
         _count,
         outputStructType=out_schema,
-        stateStructType=f"vals array<{elem}>, cnts array<bigint>",
+        stateStructType="vals array<string>, cnts array<bigint>",
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )

@@ -112,22 +112,30 @@ def _pinned_no_data_batch(spark: SparkSession, enabled: bool):
             spark.conf.set(key, old)
 
 
+# The most state partitions a drain gets from the policy: one per core
+# up to here. Each state partition pays a fixed per-batch cost (store
+# load, commit, a task), and at local[32] the JVM-state drains measured
+# much slower at 32 than at 8 (r16: interval joins 8.2 s against 2.8 s).
+_MAX_STATE_PARTITIONS = 8
+
+
 @contextmanager
 def _pinned_state_partitions(spark: SparkSession, n: int | None):
     """Pin spark.sql.shuffle.partitions for a bounded streaming run — the
     one state-partition policy every drain goes through. A stateful
     query's state-store count is fixed at its first checkpoint, and each
-    state partition pays a fixed per-batch cost (store load, commit, a
-    task), so the count follows the cluster, not the batch default:
-    ``n=None`` means ``spark.sparkContext.defaultParallelism``, one
-    partition per core and a single task wave (on a 4-core host, 8
-    partitions in two waves made the three registry_mix drains 26-30%
-    slower, and 2 was no faster than 4). The reference exposes the same
-    knob as ``sparkParallelism`` (SparkYahooRunner.scala:69); pass ``n``
-    only to pin a count on purpose. Restored after the drained run, so
-    surrounding batch queries are unaffected."""
+    state partition pays a fixed per-batch cost, so the count follows the
+    cluster, not the batch default: ``n=None`` means one partition per
+    core (``defaultParallelism``), capped at ``_MAX_STATE_PARTITIONS``.
+    On a 4-core host that is 4 partitions in one task wave (8 in two
+    waves made the three registry_mix drains 26-30% slower, and 2 was no
+    faster than 4); on wider hosts it is the 8 measured there. The
+    reference exposes the same knob as ``sparkParallelism``
+    (SparkYahooRunner.scala:69); pass ``n`` only to pin a count on
+    purpose. Restored after the drained run, so surrounding batch
+    queries are unaffected."""
     if n is None:
-        n = spark.sparkContext.defaultParallelism
+        n = min(spark.sparkContext.defaultParallelism, _MAX_STATE_PARTITIONS)
     key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key)
     spark.conf.set(key, str(n))

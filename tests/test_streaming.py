@@ -1181,9 +1181,9 @@ def test_running_counts_across_batches_with_nulls(spark, tmp_path, monkeypatch):
     assert final == want
 
 
-def test_drain_state_partitions_follow_default_parallelism(spark):
+def test_drain_state_partitions_follow_policy(spark):
     """A drain called without state_partitions runs its state operator on
-    defaultParallelism shuffle partitions (the one policy), and the
+    one shuffle partition per core up to 8 (the one policy), and the
     session's spark.sql.shuffle.partitions is restored afterwards."""
     import time
 
@@ -1219,5 +1219,36 @@ def test_drain_state_partitions_follow_default_parallelism(spark):
             time.sleep(0.1)
     finally:
         spark.streams.removeListener(listener)
-    assert listener.parts[str(q.id)] == {spark.sparkContext.defaultParallelism}
+    assert listener.parts[str(q.id)] == {min(spark.sparkContext.defaultParallelism, 8)}
     assert spark.conf.get(key) == before
+
+
+@pytest.mark.parametrize("cores,want", [(2, "2"), (8, "8"), (32, "8")])
+def test_state_partition_policy_caps_at_eight(cores, want):
+    """The policy gives one state partition per core, never more than 8
+    (a wide session must not get one state store per core)."""
+    from types import SimpleNamespace
+
+    from streambench_spark.streaming.ysb import _pinned_state_partitions
+
+    class Conf(dict):
+        get = dict.__getitem__
+
+        def set(self, k, v):
+            self[k] = v
+
+    fake = SimpleNamespace(sparkContext=SimpleNamespace(defaultParallelism=cores),
+                           conf=Conf({"spark.sql.shuffle.partitions": "200"}))
+    with _pinned_state_partitions(fake, None):
+        assert fake.conf["spark.sql.shuffle.partitions"] == want
+    assert fake.conf["spark.sql.shuffle.partitions"] == "200"
+
+
+def test_running_counts_rejects_non_string_last_key(spark):
+    """The last key travels through pandas, which keeps only strings and
+    nulls exact, so any other last-key type is refused up front."""
+    from streambench_spark.streaming.stateful import running_counts
+
+    df = spark.range(3).select(F.col("id").alias("user_id"), F.col("id").alias("k"))
+    with pytest.raises(ValueError, match="string last key"):
+        running_counts(df, ["user_id", "k"], "user_id long, k long, n long")
