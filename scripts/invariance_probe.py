@@ -19,8 +19,8 @@ for sampling, total orderings under every row_number) claims this class
 is designed out — this probe MEASURES the claim across the whole
 registry instead of trusting it.
 
-Method: one bare-shaped session (local[8], UI off — the oracle_check
-shape); each query is collected once per layout:
+Method: one bare-shaped session (local[N] at the host's core count,
+UI off — the oracle_check shape); each query is collected once per layout:
 
   pass A: session defaults (AQE on, 200 shuffle partitions, 128m splits)
   variant "partition": spark.sql.shuffle.partitions=7,
@@ -155,7 +155,7 @@ def main() -> None:
         sys.exit(2)
 
     spark = (
-        SparkSession.builder.master("local[8]")
+        SparkSession.builder.master(f"local[{len(os.sched_getaffinity(0))}]")
         .appName("invariance-probe")
         .config("spark.ui.enabled", "false")
         .getOrCreate()

@@ -69,7 +69,8 @@ def main():
         print(f"unknown query name(s): {sorted(unknown)}")
         sys.exit(2)
 
-    # BARE session — exactly what the driver hands us. The driver's
+    # BARE session — exactly what the driver hands us, one thread per
+    # core this process may run on (what nproc prints). The driver's
     # contract is sf0.01, where the default 1g heap suffices; a FULL
     # sf0.1 sweep needs more executor headroom (measured r07:
     # copurchase_triangles' join buffers OOM a 1g/8-thread heap at
@@ -77,7 +78,7 @@ def main():
     # one knob exposed: SPARK_GRAFT_ORACLE_MEM=8g for sf0.1 sweeps,
     # unset = bare 1g default, the driver-sim shape.
     builder = (
-        SparkSession.builder.master("local[8]")
+        SparkSession.builder.master(f"local[{len(os.sched_getaffinity(0))}]")
         .appName("oracle-check")
         .config("spark.ui.enabled", "false")
     )

@@ -18,8 +18,8 @@ signed 64-bit) is overflow-safe in either mode. md5 stays the default
 because it is oracle-checkable — DuckDB has no xxhash64 builtin, so
 xxhash64-mode results are verified by property tests (dedup invariants,
 Bloom FP bounds, split proportions — tests/test_hash_modes.py) and a
-measured per-row cost probe (scripts/hash_mode_probe.py), not by the
-SQL oracles.
+per-row cost measurement (the r08 local[32] hash-mode record in
+SCALE.md's "Plan-sensitivity probe" section), not by the SQL oracles.
 
 MinHash coefficients are derived from a fixed LCG so both the Spark plan
 builder and the SQL oracle embed the *same* literals.

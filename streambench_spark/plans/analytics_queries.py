@@ -468,7 +468,7 @@ def q_sliding_window_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.unix_millis("w.start").alias("window_start"), "n")
     )
-    _, table = run_to_memory(agg, mode="complete", available_now=True)
+    _, table = run_to_memory(agg, mode="complete")
     cutoff_ms = 1704024000000  # 2023-12-31 12:00:00 UTC (partial first window)
     return spark.table(table).filter(F.col("window_start") > cutoff_ms)
 
@@ -2056,25 +2056,14 @@ def q_cms_streaming_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         count_min_build,
         count_min_estimate,
     )
+    from streambench_spark.sinks.sinks import incremental_mv_sink
     from streambench_spark.sources.replay import stream_table_multifile
 
     stream = stream_table_multifile(spark, sf_dir, "events", n_files=8)
     path = _tf.mkdtemp(prefix="sb_cms_parts_")
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        count_min_build(batch_df, "user_id", _CMS_D, _CMS_W).write.mode(
-            "append"
-        ).parquet(path)
-
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", _tf.mkdtemp(prefix="sb_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
+    incremental_mv_sink(
+        stream, path, lambda b: count_min_build(b, "user_id", _CMS_D, _CMS_W)
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("CMS streaming drain exceeded 300s")
     merged = (
         spark.read.parquet(path)
         .groupBy("d", "idx")

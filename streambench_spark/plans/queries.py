@@ -79,14 +79,15 @@ def q_ysb_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     returned as a batch DataFrame — streaming ≡ batch equivalence is the
     correctness claim (SURVEY.md §5.2 step 2)."""
     from streambench_spark.sources.replay import stream_table
-    from streambench_spark.streaming.ysb import run_streaming_ysb_to_table
+    from streambench_spark.streaming.ysb import run_to_memory, ysb_streaming
 
-    events_stream = stream_table(spark, sf_dir, "events")
-    customer = load_table(spark, sf_dir, "customer")
-    return run_streaming_ysb_to_table(
-        spark, events_stream, customer, window="1 hour", watermark=None,
-        mode="complete",
+    out = ysb_streaming(
+        stream_table(spark, sf_dir, "events"),
+        load_table(spark, sf_dir, "customer"),
+        window="1 hour", watermark=None,
     )
+    _, table = run_to_memory(out, mode="complete")
+    return spark.table(table)
 
 
 @register(
@@ -291,22 +292,25 @@ def q_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ysb_streaming_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE query in the scale-correct streaming shape: append mode +
     watermark + parquet file sink (bounded state, nothing collected to the
-    driver). Emits exactly the windows finalized by the closing watermark.
+    driver). Emits exactly the windows finalized by the closing watermark:
+    a window is emitted once the final watermark (max event time − delay,
+    advanced by the closing no-data micro-batch) is >= its end; the
+    trailing window(s) stay in state, so the result is the batch result
+    minus the unfinalized windows, and late rows are dropped.
 
     The stream is pre-filtered to 'view' BEFORE withWatermark so the
     watermark clock is definitionally max(view ts) − 1 s (Catalyst pushes
     the filter below the watermark node anyway; making it explicit keeps
     the oracle's cutoff independent of optimizer placement)."""
     from streambench_spark.sources.replay import stream_table
-    from streambench_spark.streaming.ysb import run_streaming_ysb_append
+    from streambench_spark.streaming.ysb import run_append_to_parquet, ysb_streaming
 
-    return run_streaming_ysb_append(
-        spark,
+    out = ysb_streaming(
         stream_table(spark, sf_dir, "events").filter(F.col("event_type") == "view"),
         load_table(spark, sf_dir, "customer"),
-        window="1 hour",
-        watermark="1 second",
+        window="1 hour", watermark="1 second",
     )
+    return run_append_to_parquet(spark, out)
 
 
 @register("ysb_trigger_early_fire", ysb_oracle_sql(3600), tags=["ysb", "streaming"])

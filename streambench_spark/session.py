@@ -32,6 +32,19 @@ CHECKPOINT_FILE_MANAGER = (
     "FileSystemBasedCheckpointFileManager"
 )
 
+# Post-shuffle coalescing FLOOR (Spark's default is 1MB), lowered so
+# parallelismFirst's total/parallelism target actually applies to
+# byte-light CPU-DENSE stages (array_intersect over adjacency arrays,
+# shingle set verify, regex tokenize): at the default, a 5 MB shuffle
+# feeding 13 CPU-seconds of work coalesces to 5 tasks and serializes on
+# a 32-core node (r15 measured: copurchase_triangles 7.2 -> 4.5 s,
+# neardup_ngram_jaccard_capped 3.0 -> 1.8 s). Scale-inert by
+# construction: coalescing can never EXCEED shuffle.partitions, and at
+# production volumes total/parallelism dwarfs any floor so it never
+# engages — it only stops tiny-byte stages from losing the parallelism
+# the cluster already has.
+MIN_PARTITION_SIZE = "64KB"
+
 # Runtime-settable confs every query relies on, whoever created the
 # session: ``get_spark`` sets them, and ``catalog._ensure_session_confs``
 # applies them to a session the program did not create (the driver's).
@@ -69,20 +82,8 @@ def get_spark(
         .config(map=RUNTIME_CONFS)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # Lower the post-shuffle coalescing FLOOR (default 1MB) so
-        # parallelismFirst's total/parallelism target actually applies to
-        # byte-light CPU-DENSE stages (array_intersect over adjacency
-        # arrays, shingle set verify, regex tokenize): at the default, a
-        # 5 MB shuffle feeding 13 CPU-seconds of work coalesces to 5
-        # tasks and serializes on a 32-core node (r15 measured:
-        # copurchase_triangles 7.2 -> 4.5 s, neardup_ngram_jaccard_capped
-        # 3.0 -> 1.8 s). Scale-inert by construction: coalescing can
-        # never EXCEED shuffle.partitions, and at production volumes
-        # total/parallelism dwarfs any floor so the knob never engages —
-        # it only stops tiny-byte stages from losing the parallelism the
-        # cluster already has. Env-overridable for per-deployment tuning.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-                os.environ.get("SPARK_GRAFT_MIN_PARTITION_SIZE", "64KB"))
+                MIN_PARTITION_SIZE)
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -115,7 +116,7 @@ def get_spark(
         **RUNTIME_CONFS,
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.minPartitionSize":
-            os.environ.get("SPARK_GRAFT_MIN_PARTITION_SIZE", "64KB"),
+            MIN_PARTITION_SIZE,
     }
     if shuffle_partitions is not None:
         reapply["spark.sql.shuffle.partitions"] = str(shuffle_partitions)

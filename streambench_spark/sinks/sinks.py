@@ -1,9 +1,10 @@
 """Sink builders.
 
 Reference parity:
-- S8 console/metrics display (.show — YahooBenchmark.scala:63-73)
-- S9 record/window sinks (StreamBox RecordBundleSink/WindowsBundleSink,
-  sbx/test-yahoo.cpp:140-160) → console/noop/foreachBatch
+- S8 console/metrics display (.show — YahooBenchmark.scala:63-73) and
+  S9 record/window sinks (StreamBox RecordBundleSink/WindowsBundleSink,
+  sbx/test-yahoo.cpp:140-160) → ``streaming.ysb.start_query(sdf,
+  fmt="console"|"noop"|"parquet")`` and the foreachBatch sinks below
 - S10 latency-measuring sink (Flink TimestampingSink,
   YahooBenchmark.scala:35-70) → foreachBatch stamping arrival time;
   the Kafka-free harness substitutes foreachBatch arrival time for the
@@ -14,45 +15,11 @@ Reference parity:
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-
-def _ckpt() -> str:
-    return tempfile.mkdtemp(prefix="sb_ckpt_")
-
-
-def console_sink(sdf: DataFrame, mode: str = "update") -> StreamingQuery:
-    return (
-        sdf.writeStream.format("console")
-        .outputMode(mode)
-        .option("truncate", "false")
-        .option("checkpointLocation", _ckpt())
-        .start()
-    )
-
-
-def noop_sink(sdf: DataFrame, mode: str = "update") -> StreamingQuery:
-    """Pure-throughput sink (StreamBox's terminal sinks do no IO)."""
-    return (
-        sdf.writeStream.format("noop")
-        .outputMode(mode)
-        .option("checkpointLocation", _ckpt())
-        .start()
-    )
-
-
-def parquet_sink(sdf: DataFrame, path: str) -> StreamingQuery:
-    return (
-        sdf.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", path)
-        .option("checkpointLocation", _ckpt())
-        .start()
-    )
+from streambench_spark.streaming.ysb import _drain, start_writer
 
 
 def latency_marking_sink(
@@ -76,21 +43,14 @@ def latency_marking_sink(
         arrival_ms = int(time.time() * 1000)
         collector.append((arrival_ms, agg["rows"], agg["max_lu"]))
 
-    writer = (
-        sdf.writeStream.foreachBatch(handle)
-        .outputMode(mode)
-        .option("checkpointLocation", _ckpt())
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_writer(sdf.writeStream.foreachBatch(handle).outputMode(mode),
+                        available_now)
 
 
 def incremental_mv_sink(
     sdf: DataFrame,
     path: str,
     partialize,
-    timeout_s: int = 300,
 ) -> StreamingQuery:
     """Merge-on-read incremental materialized view: every micro-batch is
     reduced to PARTIAL aggregates by ``partialize`` (a batch→batch
@@ -107,24 +67,16 @@ def incremental_mv_sink(
     merge as its transform) so read-side merge cost stays O(keys), not
     O(batches x keys).
 
-    availableNow drains all input then stops; raises on timeout so a
-    partial run never masquerades as the final MV.
+    A bounded drain through the one drain core (streaming.ysb._drain):
+    availableNow, its checkpoint removed once the query ends, and a
+    raise on timeout so a partial run never masquerades as the final MV.
     """
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         partialize(batch_df).write.mode("append").parquet(path)
 
-    q = (
-        sdf.writeStream.foreachBatch(handle)
-        .outputMode("append")
-        .option("checkpointLocation", _ckpt())
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(f"availableNow run exceeded {timeout_s}s before draining")
-    return q
+    writer = sdf.writeStream.foreachBatch(handle).outputMode("append")
+    return _drain(sdf.sparkSession, writer)
 
 
 def compact_parquet_dir(
@@ -244,21 +196,21 @@ def kafka_sink(
     error otherwise (tests run Kafka-free)."""
     from streambench_spark.sources.kafka import kafka_gated
 
-    return kafka_gated(
+    writer = (
         to_json_rows(sdf)
         .writeStream.format("kafka")
         .option("kafka.bootstrap.servers", brokers)
         .option("topic", topic)
-        .option("checkpointLocation", _ckpt())
         .outputMode(mode)
-        .start
     )
+    return kafka_gated(lambda: start_writer(writer))
 
 
 def idempotent_parquet_sink(
-    sdf: DataFrame, path: str, mode: str = "append", available_now: bool = True
+    sdf: DataFrame, path: str, mode: str = "append"
 ) -> StreamingQuery:
-    """T6 depth: exactly-once file output via batch-id-keyed writes.
+    """T6 depth: exactly-once file output via batch-id-keyed writes,
+    drained availableNow through the one drain core (streaming.ysb._drain).
 
     Structured Streaming's foreachBatch is at-least-once — after a
     restart the last batch can replay with the SAME batch_id. Writing
@@ -287,14 +239,8 @@ def idempotent_parquet_sink(
             return  # replayed batch after restart: already committed
         batch_df.write.mode("overwrite").parquet(target)
 
-    writer = (
-        sdf.writeStream.foreachBatch(handle)
-        .outputMode(mode)
-        .option("checkpointLocation", _ckpt())
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    writer = sdf.writeStream.foreachBatch(handle).outputMode(mode)
+    return _drain(sdf.sparkSession, writer)
 
 
 def compact_small_files(

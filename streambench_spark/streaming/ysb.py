@@ -11,18 +11,21 @@ surface (SURVEY.md §2.7):
 - T4 triggers: processing-time early firing ≙ Flink
   EventAndProcessingTimeTrigger; availableNow for bounded replay.
 - T6 checkpointing: per-run checkpoint dir like the reference's random
-  dirs (SparkYahooRunner.scala:82).
+  dirs (SparkYahooRunner.scala:82); every bounded drain goes through one
+  core (``_drain``) that also removes its checkpoint once the query ends.
 """
 
 from __future__ import annotations
 
+import json
 import shutil
 import tempfile
+import time
 import uuid
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from streambench_spark.plans.ysb import ysb_query
 
@@ -52,27 +55,37 @@ def start_query(
     trigger_interval_ms: int | None = None,
     query_name: str | None = None,
     options: dict[str, str] | None = None,
-    checkpoint: str | None = None,
 ) -> StreamingQuery:
-    """Generic query starter exposing the reference's emission-policy knobs.
+    """Generic query starter: a ``fmt`` sink (console, noop, memory,
+    parquet, ...) in output ``mode``, started by ``start_writer``."""
+    writer = sdf.writeStream.format(fmt).outputMode(mode)
+    if query_name:
+        writer = writer.queryName(query_name)
+    for k, v in (options or {}).items():
+        writer = writer.option(k, v)
+    return start_writer(writer, available_now, trigger_interval_ms)
+
+
+def start_writer(
+    writer: DataStreamWriter,
+    available_now: bool = False,
+    trigger_interval_ms: int | None = None,
+) -> StreamingQuery:
+    """Start a configured writer under the reference's emission-policy
+    knobs, without waiting for it.
 
     - ``trigger_interval_ms`` ≙ Flink's ``flinkTriggerIntervalMillis``
       (T4, EventAndProcessingTimeTrigger early firing): processing-time
       trigger cadence for unbounded runs.
     - ``available_now`` drains bounded input then stops (the deterministic
       replay policy). Mutually exclusive with the interval trigger.
-    - ``checkpoint`` is the checkpoint directory; by default a fresh
-      temp directory that outlives the query.
+
+    The checkpoint is a fresh temp directory that outlives the query; the
+    bounded drains (``_drain``) own and remove theirs.
     """
-    writer = sdf.writeStream.format(fmt).outputMode(mode).option(
-        "checkpointLocation", checkpoint or tempfile.mkdtemp(prefix="sb_ckpt_")
-    )
-    if query_name:
-        writer = writer.queryName(query_name)
-    for k, v in (options or {}).items():
-        writer = writer.option(k, v)
     if available_now and trigger_interval_ms is not None:
         raise ValueError("availableNow and processingTime triggers are exclusive")
+    writer = writer.option("checkpointLocation", tempfile.mkdtemp(prefix="sb_ckpt_"))
     if available_now:
         writer = writer.trigger(availableNow=True)
     elif trigger_interval_ms is not None:
@@ -118,24 +131,25 @@ def _pinned_no_data_batch(spark: SparkSession, enabled: bool):
 # much slower at 32 than at 8 (r16: interval joins 8.2 s against 2.8 s).
 _MAX_STATE_PARTITIONS = 8
 
+# How long a bounded drain may run before it is stopped and raises.
+_DRAIN_TIMEOUT_S = 300
+
 
 @contextmanager
-def _pinned_state_partitions(spark: SparkSession, n: int | None):
+def _pinned_state_partitions(spark: SparkSession):
     """Pin spark.sql.shuffle.partitions for a bounded streaming run — the
     one state-partition policy every drain goes through. A stateful
     query's state-store count is fixed at its first checkpoint, and each
     state partition pays a fixed per-batch cost, so the count follows the
-    cluster, not the batch default: ``n=None`` means one partition per
-    core (``defaultParallelism``), capped at ``_MAX_STATE_PARTITIONS``.
+    cluster, not the batch default: one partition per core
+    (``defaultParallelism``), capped at ``_MAX_STATE_PARTITIONS``.
     On a 4-core host that is 4 partitions in one task wave (8 in two
     waves made the three registry_mix drains 26-30% slower, and 2 was no
     faster than 4); on wider hosts it is the 8 measured there. The
     reference exposes the same knob as ``sparkParallelism``
-    (SparkYahooRunner.scala:69); pass ``n`` only to pin a count on
-    purpose. Restored after the drained run, so surrounding batch
-    queries are unaffected."""
-    if n is None:
-        n = min(spark.sparkContext.defaultParallelism, _MAX_STATE_PARTITIONS)
+    (SparkYahooRunner.scala:69). Restored after the drained run, so
+    surrounding batch queries are unaffected."""
+    n = min(spark.sparkContext.defaultParallelism, _MAX_STATE_PARTITIONS)
     key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key)
     spark.conf.set(key, str(n))
@@ -146,151 +160,87 @@ def _pinned_state_partitions(spark: SparkSession, n: int | None):
 
 
 @contextmanager
-def _drain_checkpoint():
-    """A private checkpoint directory for one bounded drain, removed once
-    the drain is over: nothing reads it after the query terminates (the
-    result is read from the memory table or the output path)."""
+def _drain_scope(spark: SparkSession, final_no_data_batch: bool = True):
+    """What every bounded drain runs inside: the state-partition policy,
+    the optional no-data-batch pin, and a private checkpoint directory
+    (yielded) that is removed once the query is over — nothing reads it
+    after the query terminates (the result is read from the memory table
+    or the output path)."""
     path = tempfile.mkdtemp(prefix="sb_ckpt_")
     try:
-        yield path
+        with _pinned_state_partitions(spark), \
+                _pinned_no_data_batch(spark, final_no_data_batch):
+            yield path
     finally:
         shutil.rmtree(path, ignore_errors=True)
 
 
-def run_to_memory(
-    sdf: DataFrame,
-    mode: str = "update",
-    available_now: bool = True,
-    timeout_s: int = 300,
-    state_partitions: int | None = None,
-) -> tuple[StreamingQuery, str]:
-    """Run a streaming DataFrame to a memory sink; returns (query, table).
-
-    availableNow drains all available input then stops — the deterministic
-    replay path used by tests and the registry's streaming queries.
-    A drained run's checkpoint is removed; a running query keeps its own."""
-    name = f"mem_{uuid.uuid4().hex[:12]}"
-    with _pinned_state_partitions(sdf.sparkSession, state_partitions):
-        if not available_now:
-            return start_query(sdf, fmt="memory", mode=mode, query_name=name), name
-        with _drain_checkpoint() as ckpt:
-            q = start_query(sdf, fmt="memory", mode=mode, available_now=True,
-                            query_name=name, checkpoint=ckpt)
-            # awaitTermination returns False on timeout — an incomplete run
-            # must not masquerade as the final state.
-            if not q.awaitTermination(timeout_s):
-                q.stop()
-                raise TimeoutError(
-                    f"availableNow run exceeded {timeout_s}s before draining"
-                )
-    return q, name
-
-
-def run_streaming_ysb_append(
+def _drain(
     spark: SparkSession,
-    events_stream: DataFrame,
-    customer: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "1 second",
-    timeout_s: int = 300,
-    state_partitions: int | None = None,
-) -> DataFrame:
-    """Append-mode + watermark + parquet file sink — the scale-correct
-    streaming shape (T2/T3 through the driver surface): state is evicted
-    as the watermark passes each window, results land in files (never the
-    driver), and late rows are dropped.
+    writer: DataStreamWriter,
+    final_no_data_batch: bool = True,
+) -> StreamingQuery:
+    """The one bounded-drain core: start the configured ``writer``
+    availableNow inside ``_drain_scope`` and wait until it has drained
+    all available input. awaitTermination returns False on timeout; the
+    query is then stopped and TimeoutError raised, so a partial drain
+    never masquerades as the final result."""
+    with _drain_scope(spark, final_no_data_batch) as ckpt:
+        q = writer.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
+        if not q.awaitTermination(_DRAIN_TIMEOUT_S):
+            q.stop()
+            raise TimeoutError(
+                f"availableNow drain exceeded {_DRAIN_TIMEOUT_S}s before draining"
+            )
+    return q
 
-    Emission semantics (validated in tests): a window is emitted once the
-    final watermark (max event time − delay, advanced by the closing
-    no-data micro-batch) is >= its end; the trailing window(s) remain in
-    state and are NOT emitted — bounded-input append mode is the batch
-    result minus unfinalized windows."""
-    out = ysb_streaming(events_stream, customer, window=window, watermark=watermark)
-    return run_append_to_parquet(spark, out, timeout_s=timeout_s,
-                                 state_partitions=state_partitions)
+
+def run_to_memory(sdf: DataFrame, mode: str = "update") -> tuple[StreamingQuery, str]:
+    """Drain a streaming DataFrame availableNow to a memory sink; returns
+    (query, table). Complete mode makes the final table the full
+    aggregate state, equal to the batch query over the same input
+    (streaming ≡ batch, SURVEY.md §5.2 step 2). The table lives on the
+    driver, so this is test-scale by nature."""
+    name = f"mem_{uuid.uuid4().hex[:12]}"
+    writer = sdf.writeStream.format("memory").outputMode(mode).queryName(name)
+    return _drain(sdf.sparkSession, writer), name
 
 
 def run_append_to_parquet(
     spark: SparkSession,
     out: DataFrame,
-    timeout_s: int = 300,
-    state_partitions: int | None = None,
     final_no_data_batch: bool = True,
 ) -> DataFrame:
     """Drain a streaming DataFrame availableNow in append mode to a
     parquet file sink and return the files as a batch DataFrame — the
     scale-correct streaming shape (bounded state, nothing collected to
-    the driver); raises on timeout so a partial drain never masquerades
-    as the final result.
+    the driver).
 
     ``final_no_data_batch=False`` skips the trailing watermark-finalize
     micro-batch — ONLY for plans whose emissions all happen on data
     batches (see _pinned_no_data_batch); append-mode aggregates and
     outer joins must keep the default."""
     path = tempfile.mkdtemp(prefix="sb_append_out_")
-    with _pinned_state_partitions(spark, state_partitions), \
-            _pinned_no_data_batch(spark, final_no_data_batch), \
-            _drain_checkpoint() as ckpt:
-        q = start_query(out, fmt="parquet", mode="append", available_now=True,
-                        options={"path": path}, checkpoint=ckpt)
-        if not q.awaitTermination(timeout_s):
-            q.stop()
-            raise TimeoutError(f"append-mode run exceeded {timeout_s}s")
+    writer = out.writeStream.format("parquet").outputMode("append").option("path", path)
+    _drain(spark, writer, final_no_data_batch)
     return spark.read.schema(out.schema).parquet(path)
 
 
-def run_update_to_parquet(
-    spark: SparkSession,
-    out: DataFrame,
-    timeout_s: int = 300,
-    state_partitions: int | None = None,
-) -> DataFrame:
+def run_update_to_parquet(spark: SparkSession, out: DataFrame) -> DataFrame:
     """Drain an update-mode streaming DataFrame availableNow through a
     foreachBatch parquet APPEND and return the accumulated emissions as
     a batch DataFrame. The file sink alone can't take update mode; the
     foreachBatch hop can — every micro-batch's emissions land in files,
     never the driver, so per-key state size doesn't bound the driver
     (the memory-sink drain does — test-scale only). Downstream reduces
-    the cumulative emissions (e.g. max per key for monotonic counters).
-    Raises on timeout so a partial drain never masquerades as final."""
+    the cumulative emissions (e.g. max per key for monotonic counters)."""
     path = tempfile.mkdtemp(prefix="sb_update_out_")
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").parquet(path)
 
-    with _pinned_state_partitions(spark, state_partitions), \
-            _drain_checkpoint() as ckpt:
-        q = (
-            out.writeStream.foreachBatch(handle)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_s):
-            q.stop()
-            raise TimeoutError(f"update-mode drain exceeded {timeout_s}s")
+    _drain(spark, out.writeStream.foreachBatch(handle).outputMode("update"))
     return spark.read.schema(out.schema).parquet(path)
-
-
-def run_streaming_ysb_to_table(
-    spark: SparkSession,
-    events_stream: DataFrame,
-    customer: DataFrame,
-    window: str = "1 hour",
-    watermark: str | None = None,
-    mode: str = "complete",
-    state_partitions: int | None = None,
-) -> DataFrame:
-    """Bounded streaming run, final state returned as a batch DataFrame.
-
-    complete mode + memory sink → the final table IS the full aggregate
-    state, equal to the batch query over the same input (streaming ≡ batch
-    equivalence, SURVEY.md §5.2 step 2)."""
-    out = ysb_streaming(events_stream, customer, window=window, watermark=watermark)
-    _, table = run_to_memory(out, mode=mode, available_now=True,
-                             state_partitions=state_partitions)
-    return spark.table(table)
 
 
 def run_update_with_interval_trigger(
@@ -298,8 +248,6 @@ def run_update_with_interval_trigger(
     out: DataFrame,
     expected_rows: int,
     trigger_ms: int = 150,
-    timeout_s: int = 300,
-    state_partitions: int | None = None,
 ) -> DataFrame:
     """T4 end-to-end: drain a bounded stream under a PROCESSING-TIME
     trigger (the reference's early-fire cadence — Flink
@@ -338,11 +286,9 @@ def run_update_with_interval_trigger(
     per-key maximum of the cumulative emissions: update-mode re-emits a
     key each time its state changes, and the YSB aggregates (count,
     max ts) are monotonic, so max == final state == the batch result —
-    deterministic for ANY trigger cadence / file order."""
-    import json as _json
-    import tempfile as _tempfile
-    import time as _time
-
+    deterministic for ANY trigger cadence / file order. Runs inside the
+    bounded drains' ``_drain_scope`` (state-partition policy, removed
+    checkpoint) and their ``_DRAIN_TIMEOUT_S``."""
     # Stateful-plan contract check (see docstring): the offsets-stable
     # drain signal is only sound when no-data micro-batches commit.
     analyzed = out._jdf.queryExecution().analyzed().toString()
@@ -353,13 +299,12 @@ def run_update_with_interval_trigger(
             "never commit the no-data micro-batch the drain check needs"
         )
 
-    path = _tempfile.mkdtemp(prefix="sb_trigger_out_")
+    path = tempfile.mkdtemp(prefix="sb_trigger_out_")
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").parquet(path)
 
-    with _pinned_state_partitions(spark, state_partitions), \
-            _drain_checkpoint() as ckpt:
+    with _drain_scope(spark) as ckpt:
         q = (
             out.writeStream.foreachBatch(handle)
             .outputMode("update")
@@ -367,7 +312,7 @@ def run_update_with_interval_trigger(
             .trigger(processingTime=f"{trigger_ms} milliseconds")
             .start()
         )
-        deadline = _time.time() + timeout_s
+        deadline = time.time() + _DRAIN_TIMEOUT_S
         # recentProgress is a RING BUFFER (numRecentProgressUpdates,
         # default 100 entries) — summing it alone undercounts once old
         # batches age out on a long drain. Accumulate per-batchId counts
@@ -377,9 +322,9 @@ def run_update_with_interval_trigger(
         try:
             while True:
                 for p in q.recentProgress:
-                    prog = _json.loads(p) if isinstance(p, str) else p
+                    prog = json.loads(p) if isinstance(p, str) else p
                     if not isinstance(prog, dict):
-                        prog = _json.loads(prog.json)
+                        prog = json.loads(prog.json)
                     rows_by_batch[prog["batchId"]] = prog["numInputRows"]
                     src = (prog.get("sources") or [{}])[0]
                     start, end = src.get("startOffset"), src.get("endOffset")
@@ -391,12 +336,12 @@ def run_update_with_interval_trigger(
                 exc = q.exception()
                 if exc is not None:
                     raise exc
-                if _time.time() > deadline:
+                if time.time() > deadline:
                     raise TimeoutError(
                         f"interval-trigger drain saw {seen}/{expected_rows} "
-                        f"rows within {timeout_s}s"
+                        f"rows within {_DRAIN_TIMEOUT_S}s"
                     )
-                _time.sleep(0.1)
+                time.sleep(0.1)
         finally:
             q.stop()
     return spark.read.schema(out.schema).parquet(path)

@@ -147,12 +147,13 @@ def test_gen_events_stream_flows(spark):
     """S1 rate-limited streaming generator: rows flow with the generated
     schema and dim-joined ad ids."""
     from streambench_spark.sources import generators as gen
-    from streambench_spark.streaming.ysb import run_to_memory
+    from streambench_spark.streaming.ysb import start_query
 
     c = gen.gen_campaigns(spark, 10, 2)
     stream = gen.gen_events_stream(spark, c, rows_per_second=2000,
                                    num_partitions=2, ramp_up_seconds=0)
-    _, table = run_to_memory(stream, mode="append", available_now=False)
+    table = "gen_events_rows"
+    start_query(stream, fmt="memory", mode="append", query_name=table)
     import time
 
     got = 0

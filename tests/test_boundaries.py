@@ -154,7 +154,7 @@ def test_watermark_exact_boundary_window_emission(spark):
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.unix_millis("w.start").alias("ws"), "n")
     )
-    out = run_append_to_parquet(spark, agg, state_partitions=2)
+    out = run_append_to_parquet(spark, agg)
     got = {r["ws"]: r["n"] for r in out.collect()}
     h0 = 1704067200000
     assert got == {h0: 2}  # w0 emitted at exact-equality; w1 withheld

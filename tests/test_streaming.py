@@ -13,7 +13,7 @@ from streambench_spark.catalog import load_table
 from streambench_spark.plans.ysb import ysb_query
 from streambench_spark.sources import generators as gen
 from streambench_spark.sources.replay import stream_table
-from streambench_spark.streaming.ysb import run_streaming_ysb_to_table, run_to_memory, ysb_streaming
+from streambench_spark.streaming.ysb import run_to_memory, ysb_streaming
 from tests.conftest import SF_DIR
 
 
@@ -28,9 +28,9 @@ def test_streaming_equals_batch(spark):
     """complete-mode availableNow run over the frozen table == batch."""
     events_stream = stream_table(spark, SF_DIR, "events")
     customer = load_table(spark, SF_DIR, "customer")
-    streaming_result = run_streaming_ysb_to_table(
-        spark, events_stream, customer, window="1 hour", watermark=None, mode="complete"
-    )
+    out = ysb_streaming(events_stream, customer, window="1 hour", watermark=None)
+    _, table = run_to_memory(out, mode="complete")
+    streaming_result = spark.table(table)
     batch_result = ysb_query(
         load_table(spark, SF_DIR, "events"), customer, window="1 hour"
     )
@@ -43,7 +43,7 @@ def test_update_mode_final_state_equals_batch(spark):
     events_stream = stream_table(spark, SF_DIR, "events")
     customer = load_table(spark, SF_DIR, "customer")
     out = ysb_streaming(events_stream, customer, window="1 hour", watermark=None)
-    _, table = run_to_memory(out, mode="update", available_now=True)
+    _, table = run_to_memory(out, mode="update")
     emitted = spark.table(table)
     # dedupe to final state per (window, segment): max count wins
     final = (
@@ -59,15 +59,14 @@ def test_update_mode_final_state_equals_batch(spark):
 def test_append_mode_file_sink_emits_finalized_windows(spark):
     """Append + watermark + parquet sink == batch minus windows not yet
     finalized by the closing watermark (max event time − delay)."""
-    from streambench_spark.streaming.ysb import run_streaming_ysb_append
+    from streambench_spark.streaming.ysb import run_append_to_parquet
 
     customer = load_table(spark, SF_DIR, "customer")
-    appended = run_streaming_ysb_append(
-        spark,
+    appended = run_append_to_parquet(spark, ysb_streaming(
         stream_table(spark, SF_DIR, "events").filter(F.col("event_type") == "view"),
         customer,
         window="1 hour", watermark="1 second",
-    )
+    ))
     ev = load_table(spark, SF_DIR, "events")
     wm_ms = (
         ev.filter(F.col("event_type") == "view")
@@ -115,7 +114,7 @@ def test_append_mode_with_watermark_drops_late_rows(spark, tmp_path):
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.unix_millis("w.start").alias("ws"), "user_id", "n")
     )
-    _, table = run_to_memory(agg, mode="append", available_now=True)
+    _, table = run_to_memory(agg, mode="append")
     got = {(r.ws, r.n) for r in spark.table(table).collect()}
     # window [00:00:00,00:00:10) must have count 2 (late row dropped);
     # window [00:00:10,...) may or may not be emitted (wm may not pass it)
@@ -149,7 +148,7 @@ def test_update_mode_revises_counts(spark, tmp_path):
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.unix_millis("w.start").alias("ws"), "user_id", "n")
     )
-    _, table = run_to_memory(agg, mode="update", available_now=True)
+    _, table = run_to_memory(agg, mode="update")
     got = {(r.ws, r.n) for r in spark.table(table).collect()}
     assert (1704067200000, 3) in got  # revised count emitted
 
@@ -260,7 +259,7 @@ def test_stream_stream_interval_join_equals_batch(spark):
         F.col("l.event_id").alias("view_id"),
         F.col("r.event_id").alias("purchase_id"),
     )
-    _, table = run_to_memory(joined, mode="append", available_now=True)
+    _, table = run_to_memory(joined, mode="append")
     got = {(r.view_id, r.purchase_id) for r in spark.table(table).collect()}
 
     ev = load_table(spark, SF_DIR, "events")
@@ -282,13 +281,15 @@ def test_paced_replay_streams_rows(spark):
     """S7 unbounded looping replay: rows flow at the paced rate with the
     lookup columns attached and timestamps rewritten to the replay clock."""
     from streambench_spark.sources.replay import paced_replay, with_index
+    from streambench_spark.streaming.ysb import start_query
 
     lookup = with_index(
         load_table(spark, SF_DIR, "events").select("event_id", "user_id").limit(100),
         "event_id",
     )
     stream = paced_replay(spark, lookup, rows_per_second=500, num_partitions=2, ts_col="ts")
-    _, table = run_to_memory(stream, mode="append", available_now=False)
+    table = "paced_replay_rows"
+    start_query(stream, fmt="memory", mode="append", query_name=table)
     import time
 
     got = 0
@@ -367,8 +368,7 @@ def test_running_value_stats_matches_batch(spark):
 
     sf = SF_DIR
     stream = stream_table(spark, sf, "events").select("user_id", "value")
-    q, table = run_to_memory(running_value_stats(stream), mode="update",
-                             available_now=True, state_partitions=4)
+    q, table = run_to_memory(running_value_stats(stream), mode="update")
     got = {
         r["user_id"]: (r["sum_cents"], r["n"], r["max_cents"])
         for r in spark.table(table).groupBy("user_id").agg(
@@ -841,7 +841,7 @@ def test_rocksdb_state_store_matches_default(spark):
             .agg(F.count(F.lit(1)).alias("n"))
             .select(F.unix_millis("w.start").alias("ws"), "event_type", "n")
         )
-        out = run_append_to_parquet(spark, agg, state_partitions=4)
+        out = run_append_to_parquet(spark, agg)
         return sorted(map(tuple, out.collect()))
 
     base = run()
@@ -884,8 +884,7 @@ def test_running_value_stats_negative_and_null_values(spark, tmp_path):
     stream = spark.readStream.schema(schema).option(
         "maxFilesPerTrigger", 1
     ).parquet(src)
-    q, table = run_to_memory(running_value_stats(stream), mode="update",
-                             available_now=True, state_partitions=2)
+    q, table = run_to_memory(running_value_stats(stream), mode="update")
     got = {
         r["user_id"]: (r["sum_cents"], r["n"], r["max_cents"])
         for r in spark.table(table).groupBy("user_id").agg(
@@ -961,8 +960,7 @@ def test_skip_no_data_batch_preserves_drain_results(spark, tmp_path):
             out = stream.withWatermark("ts", "1 second").dropDuplicatesWithinWatermark(
                 ["user_id", "event_type"]
             ).select("user_id", "event_type")
-        df = run_append_to_parquet(spark, out, state_partitions=2,
-                                   final_no_data_batch=not skip)
+        df = run_append_to_parquet(spark, out, final_no_data_batch=not skip)
         return sorted(map(tuple, df.collect()))
 
     for kind in ("join", "dedup"):
@@ -1108,18 +1106,29 @@ def test_ensure_session_confs_sets_checkpoint_manager(spark):
 
 
 def test_bounded_drains_remove_their_checkpoint(spark, tmp_path, monkeypatch):
-    """An append drain and an update drain leave no sb_ckpt_* directory
-    behind; their output directories stay (the result reads them)."""
+    """Append, update, memory and incremental-MV drains, and the CMS
+    registry query's drain, leave no sb_ckpt_* directory behind; the
+    output directories stay (the result reads them)."""
     import tempfile
 
+    from streambench_spark.plans.queries import REGISTRY
+    from streambench_spark.sinks.sinks import incremental_mv_sink
     from streambench_spark.streaming.ysb import run_append_to_parquet, run_update_to_parquet
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     ev = stream_table(spark, SF_DIR, "events")
+    n_events = load_table(spark, SF_DIR, "events").count()
     appended = run_append_to_parquet(spark, ev.select("event_id"))
     counted = run_update_to_parquet(spark, ev.groupBy("event_type").count())
-    assert appended.count() == load_table(spark, SF_DIR, "events").count()
+    _, table = run_to_memory(ev.groupBy("event_type").count(), mode="complete")
+    mv = str(tmp_path / "mv")
+    incremental_mv_sink(ev, mv, lambda b: b.groupBy("event_type").count())
+    cms = REGISTRY["cms_streaming_merge"].fn(spark, SF_DIR)
+    assert appended.count() == n_events
     assert counted.count() > 0
+    assert spark.table(table).agg(F.sum("count")).first()[0] == n_events
+    assert spark.read.parquet(mv).agg(F.sum("count")).first()[0] == n_events
+    assert cms.count() > 0
     left = sorted(p.name for p in tmp_path.iterdir())
     assert not [n for n in left if n.startswith("sb_ckpt_")], left
     assert [n for n in left if n.startswith("sb_append_out_")]
@@ -1182,9 +1191,9 @@ def test_running_counts_across_batches_with_nulls(spark, tmp_path, monkeypatch):
 
 
 def test_drain_state_partitions_follow_policy(spark):
-    """A drain called without state_partitions runs its state operator on
-    one shuffle partition per core up to 8 (the one policy), and the
-    session's spark.sql.shuffle.partitions is restored afterwards."""
+    """A drain runs its state operator on one shuffle partition per core
+    up to 8 (the one policy), and the session's
+    spark.sql.shuffle.partitions is restored afterwards."""
     import time
 
     from pyspark.sql.streaming import StreamingQueryListener
@@ -1239,7 +1248,7 @@ def test_state_partition_policy_caps_at_eight(cores, want):
 
     fake = SimpleNamespace(sparkContext=SimpleNamespace(defaultParallelism=cores),
                            conf=Conf({"spark.sql.shuffle.partitions": "200"}))
-    with _pinned_state_partitions(fake, None):
+    with _pinned_state_partitions(fake):
         assert fake.conf["spark.sql.shuffle.partitions"] == want
     assert fake.conf["spark.sql.shuffle.partitions"] == "200"
 
