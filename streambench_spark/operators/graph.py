@@ -216,7 +216,6 @@ def pagerank_exact(
     dst: str = "dst",
     iterations: int = 3,
     scale: int = 1_000_000,
-    edges_distinct: bool = False,
     checkpoint: bool = True,
     broadcast_max_nodes: int = 4_000_000,
 ) -> DataFrame:
@@ -228,53 +227,61 @@ def pagerank_exact(
     engine (and the DuckDB oracle) reproduces the values exactly; float
     PageRank differs in the last bits across summation orders.
 
-    Per round: one join + one aggregate, both shuffled on the node id —
-    the same bounded shape as connected_components, fixed iteration
-    count (the classic 100 TB posture: ranks converge to working
-    precision in a handful of rounds; exactness makes runs reproducible
-    and testable).
+    The graph is held once, as a node-keyed adjacency frame
+    ``adj(a, nb, deg)``: the distinct symmetrized neighbours of each
+    node in one array and ``deg = size(nb)``. ``collect_set`` drops
+    duplicate edges (either orientation) in the aggregate's own shuffle,
+    so callers pass edges as they come, duplicates included. It is the
+    only checkpoint: one row per node and one array element per directed
+    edge (8 bytes), against one deserialized row per directed edge for
+    an edge-list checkpoint.
+
+    Per round: ``adj`` ⋈ ranks on the node id → ``explode(nb)``
+    carrying ``pr DIV deg`` → sum per neighbour (the round's one
+    shuffle, keyed on the exploded node id) → ranks rebuilt over
+    ``adj``'s node set. Fixed iteration count (the classic 100 TB
+    posture: ranks converge to working precision in a handful of
+    rounds; exactness makes runs reproducible and testable).
+
+    Trade-off of per-node arrays: a hub's whole neighbour list is one
+    row, so its explode runs in one task and its array must fit in one
+    row (under 2^31 elements); an edge-row layout spreads a hub over
+    tasks. The co-purchase graph's degrees are bounded by basket sizes.
     """
     sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).unionByName(
         edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
     )
-    if not edges_distinct:
-        # callers that already deduped (and orient src < dst, so the
-        # two union legs cannot collide) skip this full-edge shuffle
-        sym = sym.distinct()
-    sym = sym.localCheckpoint()
-    # degree is consulted every round — materialize once and carry it
-    # INSIDE the ranks frame, so each round is exactly one edge join +
-    # one aggregate + one node-sized rank rebuild (no per-round deg join)
-    deg = sym.groupBy("a").agg(F.count(F.lit(1)).alias("deg")).localCheckpoint()
-    # Broadcast the node-sized rank frame into the per-round edge join
-    # when the node count fits (guide §3.1): the edge list — the HEAVY
-    # side — is then never shuffled by the join (one shuffle per round,
-    # the contribution aggregate, instead of two), and the node-sized
-    # rank rebuild join goes broadcast too. Guarded by an exact count on
-    # the checkpointed degree frame so a 100 TB graph whose node set
-    # cannot broadcast falls back to the per-round SMJ unchanged.
-    # Ranks verified identical under both strategies (r16).
-    n_nodes = deg.count()
+    adj = (
+        sym.groupBy("a").agg(F.collect_set("b").alias("nb"))
+        .withColumn("deg", F.size("nb"))
+        .localCheckpoint()
+    )
+    # Broadcast the node-sized rank frame into the per-round adjacency
+    # join when the node count fits (guide §3.1): the adjacency frame is
+    # then never shuffled by the join (one shuffle per round, the
+    # contribution aggregate), and the node-sized rank rebuild join goes
+    # broadcast too. Guarded by an exact count on the checkpointed
+    # adjacency frame so a 100 TB graph whose node set cannot broadcast
+    # falls back to the per-round SMJ unchanged. Ranks verified
+    # identical under both strategies.
+    n_nodes = adj.count()
     bcast = n_nodes <= broadcast_max_nodes
-    ranks = deg.select("a", F.lit(scale).cast("long").alias("pr"), "deg")
+    nodes = adj.select("a")
+    ranks = nodes.select("a", F.lit(scale).cast("long").alias("pr"))
     base = F.lit((15 * scale) // 100).cast("long")
     for _ in range(iterations):
-        # per-node contribution is computed on the node-sized ranks
-        # frame BEFORE touching the edge list, so the edge join
-        # carries one long instead of (pr, deg)
-        rside = ranks.select("a", F.expr("pr DIV deg").alias("c"))
-        if bcast:
-            rside = F.broadcast(rside)
+        rside = F.broadcast(ranks) if bcast else ranks
         contrib = (
-            sym.join(rside, "a")
+            adj.join(rside, "a")
+            .select("nb", F.expr("pr DIV deg").alias("c"))
+            .select(F.explode("nb").alias("b"), "c")
             .groupBy(F.col("b").alias("a"))
             .agg(F.sum("c").alias("s"))
         )
         cside = F.broadcast(contrib) if bcast else contrib
-        ranks = deg.join(cside, "a", "left").select(
+        ranks = nodes.join(cside, "a", "left").select(
             "a",
             (base + F.expr("85 * coalesce(s, 0L) DIV 100").cast("long")).alias("pr"),
-            "deg",
         )
         if checkpoint:
             # truncate lineage so round k's plan doesn't re-execute 1..k-1

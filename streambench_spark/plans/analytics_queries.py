@@ -1311,12 +1311,28 @@ r{i} AS (
     return "".join(parts)
 
 
+def _copurchase_pairs(li: DataFrame) -> DataFrame:
+    """Part pairs sharing an order, oriented src < dst, one row per
+    shared order: the lineitem self-join on l_orderkey, before
+    _copurchase_edges dedups it."""
+    return (
+        li.alias("a")
+        .join(li.alias("b"), F.expr(
+            "a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey"))
+        .select(
+            F.col("a.l_partkey").alias("src"),
+            F.col("b.l_partkey").alias("dst"),
+        )
+    )
+
+
 def _copurchase_edges(li: DataFrame, basket_local: bool = False) -> DataFrame:
-    """THE co-purchase graph definition, single-sourced for pagerank /
-    triangles / degree-distribution: distinct part pairs sharing an
-    order, oriented src < dst (so the edge set is duplicate-free and
-    symmetrization downstream cannot double-count). One self-join on
-    l_orderkey; per-order line counts are bounded, so no hot key.
+    """THE co-purchase graph definition, single-sourced for triangles /
+    degree-distribution (pagerank takes _copurchase_pairs and dedups
+    them itself): distinct part pairs sharing an order, oriented
+    src < dst (so the edge set is duplicate-free and symmetrization
+    downstream cannot double-count). One self-join on l_orderkey;
+    per-order line counts are bounded, so no hot key.
 
     ``basket_local=True`` swaps the self-join for the
     groupBy(l_orderkey).collect_set + row-local ordered-pair explode
@@ -1342,16 +1358,7 @@ def _copurchase_edges(li: DataFrame, basket_local: bool = False) -> DataFrame:
     rows). The flag keeps that choice explicit per consumer instead of
     baking one answer in."""
     if not basket_local:
-        return (
-            li.alias("a")
-            .join(li.alias("b"), F.expr(
-                "a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey"))
-            .select(
-                F.col("a.l_partkey").alias("src"),
-                F.col("b.l_partkey").alias("dst"),
-            )
-            .distinct()
-        )
+        return _copurchase_pairs(li).distinct()
     arr = li.groupBy("l_orderkey").agg(
         F.sort_array(F.collect_set("l_partkey")).alias("items")
     )
@@ -1373,21 +1380,22 @@ def q_copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     every rank value engine-exact — float PageRank diverges in the last
     bits across summation orders. Edge build is one self-join on
     l_orderkey (per-order line counts are bounded, so no hot key); each
-    round is a join + aggregate shuffled on the node id."""
+    round joins the ranks to the node-keyed adjacency arrays, explodes
+    them and sums per neighbour (one shuffle)."""
     from streambench_spark.operators.graph import pagerank_exact
 
     li = load_table(spark, sf_dir, "lineitem")
-    edges = _copurchase_edges(li)
-    # edges are distinct and oriented src < dst → the symmetrized union
-    # inside pagerank_exact cannot contain duplicates; skip its re-dedup.
+    # The co-purchase edges before their distinct: pagerank_exact's
+    # adjacency build dedups them in the shuffle it makes anyway, one
+    # shuffle fewer than distinct-then-collect.
     # checkpoint=False (r15, guide §1.2/§5): this is a FIXED 3-round run
     # with no per-round action, so the unrolled lineage executes exactly
     # once in the final sink — the per-round localCheckpoint bought no
     # re-execution protection and cost a node-sized materialization job
-    # per round (measured 27 → 18 jobs, rows identical; sym/deg stay
-    # checkpointed inside pagerank_exact and are exchange-reused).
-    return pagerank_exact(edges, iterations=3, edges_distinct=True,
-                          checkpoint=False)
+    # per round (measured 27 → 18 jobs, rows identical). The adjacency
+    # frame stays checkpointed inside pagerank_exact: every round scans
+    # it, 20k rows at sf0.1 against 2.4M symmetrized edge rows.
+    return pagerank_exact(_copurchase_pairs(li), iterations=3, checkpoint=False)
 
 
 @register(

@@ -45,6 +45,21 @@ CHECKPOINT_FILE_MANAGER = (
 # the cluster already has.
 MIN_PARTITION_SIZE = "64KB"
 
+# Python workers fork from ``streambench_spark.pydaemon``, which holds
+# pandas and pyarrow before the first fork (static confs: they only take
+# effect on a session this factory creates). The daemon is launched as
+# ``python -m``, so the package's parent directory goes on the workers'
+# PYTHONPATH; without it the daemon cannot import the module when the
+# driver's working directory is elsewhere. One idle worker is kept per
+# executor instead of one per finished task: a fork of the preloaded
+# daemon is cheap.
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PYTHON_WORKER_CONFS = {
+    "spark.python.daemon.module": "streambench_spark.pydaemon",
+    "spark.executorEnv.PYTHONPATH": PACKAGE_PARENT,
+    "spark.python.factory.idleWorkerMaxPoolSize": "1",
+}
+
 # Runtime-settable confs every query relies on, whoever created the
 # session: ``get_spark`` sets them, and ``catalog._ensure_session_confs``
 # applies them to a session the program did not create (the driver's).
@@ -80,6 +95,7 @@ def get_spark(
         .master(master or f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config(map=RUNTIME_CONFS)
+        .config(map=PYTHON_WORKER_CONFS)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",

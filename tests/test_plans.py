@@ -307,57 +307,76 @@ def test_triangles_node_keyed_no_forced_broadcast(spark):
 
 def test_pagerank_round_is_one_join_one_aggregate(spark):
     """One PageRank round (uncheckpointed lineage), both strategies
-    (operators/graph.py:pagerank_exact, r16):
+    (operators/graph.py:pagerank_exact). Every scan is the checkpointed
+    adjacency frame ``adj(a, nb, deg)``; the round explodes ``nb`` once.
 
     - node count under broadcast_max_nodes: the node-sized rank frame is
-      hint-broadcast into the edge join and the rank rebuild — exactly
-      TWO BroadcastExchange and ONE shuffle (the contribution
-      aggregate, keyed on the node id) per round; the edge list is
-      never shuffled by the join.
+      hint-broadcast into the adjacency join and the contribution sums
+      into the rank rebuild — exactly TWO BroadcastExchange and ONE
+      shuffle (the contribution aggregate, keyed on the exploded
+      neighbour id ``b``) per round; the adjacency frame is never
+      shuffled by the join.
     - guard fallback (broadcast_max_nodes=0 — the 100 TB posture when
-      the node set can't broadcast): the original shape, 4 shuffle
-      exchanges, nothing hint-broadcast, every key a node id."""
-    import pyspark.sql.functions as F
-
+      the node set can't broadcast): 4 shuffle exchanges, nothing
+      hint-broadcast: the adjacency and rank sides of the join and the
+      node set of the rebuild on ``a``, the aggregate on ``b``."""
     from streambench_spark.catalog import load_table
     from streambench_spark.operators.graph import pagerank_exact
+    from streambench_spark.plans.analytics_queries import _copurchase_pairs
 
-    li = load_table(spark, SF_DIR, "lineitem")
-    edges = (
-        li.alias("a")
-        .join(li.alias("b"), F.expr(
-            "a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey"))
-        .select(F.col("a.l_partkey").alias("src"),
-                F.col("b.l_partkey").alias("dst"))
-        .distinct()
-    )
+    edges = _copurchase_pairs(load_table(spark, SF_DIR, "lineitem"))
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        pr = pagerank_exact(edges, iterations=1, edges_distinct=True,
-                            checkpoint=False)
+        pr = pagerank_exact(edges, iterations=1, checkpoint=False)
         plan = spark._sc._jvm.PythonSQLUtils.explainString(
             pr._jdf.queryExecution(), "formatted"
         )
-        pr_fb = pagerank_exact(edges, iterations=1, edges_distinct=True,
-                               checkpoint=False, broadcast_max_nodes=0)
+        pr_fb = pagerank_exact(edges, iterations=1, checkpoint=False,
+                               broadcast_max_nodes=0)
         plan_fb = spark._sc._jvm.PythonSQLUtils.explainString(
             pr_fb._jdf.queryExecution(), "formatted"
         )
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    for p in (plan, plan_fb):
+        scans = re.findall(r"\(\d+\) Scan ExistingRDD\nOutput \[\d+\]: \[([^\]]*)\]", p)
+        assert scans and all(re.match(r"a#\d+L, nb#\d+, deg#\d+$", o) for o in scans), scans
+        assert len(re.findall(r"\(\d+\) Generate\n", p)) == 1
+        assert re.search(r"Arguments: explode\(nb#\d+\)", p)
     # broadcast path: 2 broadcasts, 1 true shuffle (count("Exchange (")
     # includes BroadcastExchange as a substring match)
     assert plan.count("BroadcastExchange (") == 2
     assert plan.count("Exchange (") - plan.count("BroadcastExchange (") == 1
-    keys = set(re.findall(r"Arguments: hashpartitioning\((\w+)#", plan))
-    assert keys <= {"b"}, keys
-    # guard fallback: the pre-r16 SMJ shape, unchanged
+    keys = re.findall(r"Arguments: hashpartitioning\((\w+)#", plan)
+    assert keys == ["b"], keys
+    # guard fallback: sort-merge joins on the node id
     assert plan_fb.count("BroadcastExchange (") == 0
     assert plan_fb.count("Exchange (") == 4
-    keys_fb = set(re.findall(r"Arguments: hashpartitioning\((\w+)#", plan_fb))
-    assert keys_fb <= {"a", "b"}, keys_fb
+    keys_fb = re.findall(r"Arguments: hashpartitioning\((\w+)#", plan_fb)
+    assert sorted(keys_fb) == ["a", "a", "a", "b"], keys_fb
 
+
+
+def test_pagerank_checkpoint_holds_adjacency_not_edge_rows(spark):
+    """copurchase_pagerank's one eager checkpoint is the node-keyed
+    adjacency frame: it adds under 16 bytes of block store per directed
+    co-purchase edge (one 8-byte array element each, plus one row per
+    node). A checkpoint of the symmetrized edge list holds one
+    deserialized row per directed edge, about 84 bytes."""
+    from streambench_spark.catalog import load_table
+    from streambench_spark.plans.analytics_queries import _copurchase_edges
+
+    def resident():
+        return {i.id(): i.memSize() + i.diskSize()
+                for i in spark._jsc.sc().getRDDStorageInfo()}
+
+    n_edges = _copurchase_edges(load_table(spark, SF_DIR, "lineitem")).count()
+    before = resident()
+    pr = REGISTRY["copurchase_pagerank"].fn(spark, SF_DIR)
+    assert pr.count() > 0
+    added = sum(b for i, b in resident().items() if i not in before)
+    assert 0 < added < 16 * 2 * n_edges, (added, n_edges)
 
 def test_exchange_reuse_for_shared_aggregate(spark):
     """A self-joined aggregate reuses ONE shuffle (ReusedExchange):

@@ -1045,8 +1045,8 @@ def test_pagerank_matches_python_model(spark, edge_list):
     """The scaled-integer PageRank vs a pure-Python replay of the same
     integer recurrence (symmetrize+distinct, c = pr // deg, pr' =
     0.15*scale + 85*sum(c) // 100). The claim under test is that the
-    DISTRIBUTED plan (edge join + aggregate per round, lineage
-    truncation between rounds) computes exactly the sequential
+    DISTRIBUTED plan (adjacency join + explode + aggregate per round,
+    lineage truncation between rounds) computes exactly the sequential
     fixed-point arithmetic — self-loops, duplicate edges, and both
     orientations included. Any drift (a float sneaking in, a lost
     contribution on a checkpoint boundary) breaks bit-equality."""

@@ -1105,6 +1105,17 @@ def test_ensure_session_confs_sets_checkpoint_manager(spark):
     assert spark.conf.get(_CKPT_MANAGER_KEY) == CHECKPOINT_FILE_MANAGER
 
 
+
+def test_python_workers_fork_from_preloaded_daemon(spark):
+    """The session's Python workers fork from streambench_spark.pydaemon,
+    so even a plain (non-Arrow) UDF runs in a process that already holds
+    pandas: the import is shared copy-on-write, not repeated per worker."""
+    import sys
+
+    assert spark.conf.get("spark.python.daemon.module") == "streambench_spark.pydaemon"
+    has_pandas = F.udf(lambda _: "pandas" in sys.modules, "boolean")
+    assert {r[0] for r in spark.range(4).select(has_pandas("id")).collect()} == {True}
+
 def test_bounded_drains_remove_their_checkpoint(spark, tmp_path, monkeypatch):
     """Append, update, memory and incremental-MV drains, and the CMS
     registry query's drain, leave no sb_ckpt_* directory behind; the
