@@ -12,7 +12,7 @@ kept under ~1800 bytes: it carries the total, the host shape and gauges,
 a fixed set of headline queries plus the slowest five, and a pointer to
 ``BENCH_FULL.json`` (written next to this file) holding every per-query
 timing. Round 2 printed all timings on the line and the driver's tail cut
-it mid-object (BENCH_r02 ``parsed: null``) — the split is the fix. If any
+it mid-object (``history/BENCH_r02.json``: ``parsed: null``) — the split is the fix. If any
 query fails, ``value`` is null and the failures are listed by exception
 class (``errors_by_class``) on the line and in the file. ``cpus`` is the
 ``local[N]`` count: totals taken at different counts do not compare.
@@ -474,7 +474,7 @@ def main() -> None:
         line.pop("queries", None)
         out = json.dumps(line)
     # Tail hygiene: the driver records only a ~2000-char stdout TAIL, so the
-    # JSON line must be the last thing any thread writes. BENCH_r02 was
+    # JSON line must be the last thing any thread writes. history/BENCH_r02.json was
     # nulled by a truncated tail and r03's tail carried a JVM stack trace
     # printed by a late streaming-teardown thread right before the line —
     # so: stop every active streaming query, silence the JVM logger, tear

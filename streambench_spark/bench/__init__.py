@@ -1,23 +1,10 @@
-"""Benchmark harness: param registry (M5), trial loop (M4), and the
-throughput/latency metric tuple (M1-M3) of the reference suite.
-
-Reference shape: ysb/benchmark/yahoo/Benchmark.scala:12-17 (param map),
-:59-126 (trial loop — run N trials, report each), and the metric tuple of
-YahooBenchmark.scala:63-73 (throughput × latency min/avg/p95/p99/max).
+"""The latency half of the reference suite's metric tuple (M3): the
+grouped-max composition over an output capture, and the min/avg/p95/
+p99/max report (YahooBenchmark.scala:63-73, SparkYahooRunner.scala:
+119-145). The YSB throughput and latency trials run in
+``perfbench/ysb_live``, which reports through ``latency_report``.
 """
 
-from streambench_spark.bench.params import BenchParams
-from streambench_spark.bench.harness import (
-    latency_report,
-    run_benchmark,
-    run_latency_trial,
-    run_throughput_trial,
-)
+from streambench_spark.bench.harness import latency_analysis, latency_report
 
-__all__ = [
-    "BenchParams",
-    "latency_report",
-    "run_benchmark",
-    "run_latency_trial",
-    "run_throughput_trial",
-]
+__all__ = ["latency_analysis", "latency_report"]

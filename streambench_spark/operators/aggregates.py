@@ -2,12 +2,15 @@
 
 - A7 batch grouped max            SparkYahooRunner.scala:136-137
 - A8 global multi-agg + percentiles SparkYahooRunner.scala:139-144
-- A9 throughput counting is in streaming/listeners.py
+- A9 throughput counting is read from progress events by
+  perfbench/ysb_live; its latency samples go through
+  bench/harness.latency_report
 
 ``percentile`` (exact) is used instead of ``percentile_approx`` when an
-oracle must hash-match (DuckDB quantile_cont is exact); the harness keeps
-``percentile_approx`` for the reference-faithful latency metric where
-approximation is the documented semantic.
+oracle must hash-match (DuckDB quantile_cont is exact);
+``bench/harness.latency_analysis`` keeps ``percentile_approx`` for the
+reference-faithful latency metric where approximation is the documented
+semantic.
 """
 
 from __future__ import annotations

@@ -901,7 +901,7 @@ def q_kafka_wire_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the decode the way the reference's latency read-back does
     (SparkYahooRunner.scala:127-135: batch-read the output topic, decode
     the JSON value, keep the broker timestamp). The payload is serialized
-    with the same to_json(struct(...)) shape as sinks.to_json_rows (S2/S3,
+    with the reference's Kafka sink shape, to_json(struct(...)) (S2/S3,
     YahooBenchmarkRunner.scala:40-47); value goes through cents (long) so
     the roundtrip is over exact integer/string JSON types."""
     from pyspark.sql.types import LongType, StringType, StructField, StructType

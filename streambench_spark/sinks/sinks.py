@@ -9,8 +9,11 @@ Reference parity:
   YahooBenchmark.scala:35-70) → foreachBatch stamping arrival time;
   the Kafka-free harness substitutes foreachBatch arrival time for the
   broker's LogAppendTime (documented difference, SURVEY.md §7.3)
-- S2/S3 Kafka sinks (to_json(struct("*")) — YahooBenchmarkRunner.scala:40-53)
-  gated behind broker availability; the JSON serialization is identical.
+
+The S2/S3 Kafka sinks are not built: there is no broker or
+spark-sql-kafka jar on this system. Their wire shape, to_json(struct(*))
+(YahooBenchmarkRunner.scala:40-47), is proved by the
+``kafka_wire_roundtrip`` registry query.
 """
 
 from __future__ import annotations
@@ -31,7 +34,9 @@ def latency_marking_sink(
     the Kafka-free analog of the broker LogAppendTime latency clock.
     The batch is lazy until its aggregate is collected, so the stamp is
     taken after ``collect()`` returns: every record has been produced by
-    then, and ``arrival_ms >= max_last_update_ms`` holds."""
+    then, and ``arrival_ms >= max_last_update_ms`` holds.
+    ``available_now`` drains bounded input through the one drain core
+    and returns the terminated query."""
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         import time
@@ -43,7 +48,8 @@ def latency_marking_sink(
         arrival_ms = int(time.time() * 1000)
         collector.append((arrival_ms, agg["rows"], agg["max_lu"]))
 
-    return start_writer(sdf.writeStream.foreachBatch(handle).outputMode(mode),
+    return start_writer(sdf.sparkSession,
+                        sdf.writeStream.foreachBatch(handle).outputMode(mode),
                         available_now)
 
 
@@ -160,50 +166,6 @@ def write_bucketed(
     if sort_cols:
         w = w.sortBy(*sort_cols)
     w.saveAsTable(table)
-
-
-def to_json_rows(df: DataFrame, key_col: str | None = None) -> DataFrame:
-    """S2/S3 serialization: to_json(struct("*")) as value (+ optional key),
-    the exact Kafka wire shape of the reference
-    (YahooBenchmarkRunner.scala:40-47)."""
-    cols = [F.to_json(F.struct(*df.columns)).alias("value")]
-    if key_col:
-        cols.insert(0, F.col(key_col).cast("string").alias("key"))
-    return df.select(*cols)
-
-
-def kafka_batch_sink(
-    df: DataFrame, topic: str, brokers: str, key_col: str | None = None
-) -> None:
-    """S3: one-shot batch write of a (small) table to a topic — the
-    reference seeds the campaigns dim this way before the run
-    (YahooBenchmarkRunner.scala:40-44). Same gating as the sources."""
-    from streambench_spark.sources.kafka import kafka_gated
-
-    kafka_gated(
-        to_json_rows(df, key_col=key_col)
-        .write.format("kafka")
-        .option("kafka.bootstrap.servers", brokers)
-        .option("topic", topic)
-        .save
-    )
-
-
-def kafka_sink(
-    sdf: DataFrame, topic: str, brokers: str, mode: str = "update"
-) -> StreamingQuery:
-    """S2: requires the spark-sql-kafka package + a broker; raises a clear
-    error otherwise (tests run Kafka-free)."""
-    from streambench_spark.sources.kafka import kafka_gated
-
-    writer = (
-        to_json_rows(sdf)
-        .writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", brokers)
-        .option("topic", topic)
-        .outputMode(mode)
-    )
-    return kafka_gated(lambda: start_writer(writer))
 
 
 def idempotent_parquet_sink(

@@ -1,3 +1,4 @@
 """Structured Streaming half of the engine: streaming YSB query builders,
-watermark/trigger/output-mode policy (SURVEY.md §2.7), throughput
-listener (M1/A9), and run helpers."""
+watermark/trigger/output-mode policy (SURVEY.md §2.7), the one bounded
+drain core and its run helpers, stateful operators, and per-batch
+statistics (M6)."""

@@ -1,77 +1,12 @@
-"""M1/A9: throughput measurement via StreamingQueryListener — the exact
-semantics of the reference's Listener (SparkYahooRunner.scala:28-40,
-91-113): accumulate numInputRows across progress events; throughput =
-rows * 1000 / (end - start) ms, start at onQueryStarted, end at
-onQueryTerminated. Documented as a lower bound, as the reference does
-(SparkYahooRunner.scala:91-97: termination fires after the last batch)."""
+"""M6: per-batch streaming statistics — pull-based ``progress_stats``
+from a query's recentProgress, and the listener-fed
+``PeriodicStatsReporter`` (StreamBox's periodic ReportStatistics).
+The YSB throughput metric (M1/A9) is read from progress events by
+``perfbench/ysb_live``."""
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql.streaming import StreamingQueryListener
-
-
-class ThroughputListener(StreamingQueryListener):
-    """Tracks one query. ``bind(query_id)`` pins it explicitly; unbound,
-    it reads as the first query that started after registration.
-
-    Events are accumulated PER QUERY ID, never blindly: the listener bus
-    is async, so between registration and ``bind`` a concurrent query's
-    progress can arrive — attributing it to the trial would silently
-    inflate throughput. Per-query buffering means late binding selects
-    exactly the bound query's events, including any delivered before
-    ``bind`` executed."""
-
-    def __init__(self) -> None:
-        self.query_id: str | None = None
-        self._first_started: str | None = None
-        self._rows: dict[str, int] = {}
-        self._start: dict[str, float] = {}
-        self._end: dict[str, float] = {}
-
-    def bind(self, query_id) -> None:
-        self.query_id = str(query_id)
-
-    def _qid(self) -> str | None:
-        return self.query_id or self._first_started
-
-    def onQueryStarted(self, event) -> None:
-        qid = str(event.id)
-        if self._first_started is None:
-            self._first_started = qid
-        self._start.setdefault(qid, time.time() * 1000)
-
-    def onQueryProgress(self, event) -> None:
-        qid = str(event.progress.id)
-        self._rows[qid] = self._rows.get(qid, 0) + event.progress.numInputRows
-
-    def onQueryIdle(self, event) -> None:
-        pass
-
-    def onQueryTerminated(self, event) -> None:
-        self._end[str(event.id)] = time.time() * 1000
-
-    @property
-    def rows(self) -> int:
-        return self._rows.get(self._qid(), 0)
-
-    @property
-    def start_ms(self) -> float | None:
-        return self._start.get(self._qid())
-
-    @property
-    def end_ms(self) -> float | None:
-        return self._end.get(self._qid())
-
-    @property
-    def throughput_rows_per_s(self) -> float:
-        """rows * 1000 / duration_ms — the reference's lower-bound metric."""
-        if self.start_ms is None:
-            return 0.0
-        end = self.end_ms or (time.time() * 1000)
-        dur = max(end - self.start_ms, 1.0)
-        return self.rows * 1000.0 / dur
 
 
 def progress_stats(query) -> list[dict]:

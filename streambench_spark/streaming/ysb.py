@@ -9,7 +9,8 @@ surface (SURVEY.md §2.7):
 - T3 late data: append mode + watermark drops it (Flink FIRE_AND_PURGE);
   update mode keeps revising (Spark-runner behavior).
 - T4 triggers: processing-time early firing ≙ Flink
-  EventAndProcessingTimeTrigger; availableNow for bounded replay.
+  EventAndProcessingTimeTrigger (``run_update_with_interval_trigger``);
+  availableNow for bounded replay.
 - T6 checkpointing: per-run checkpoint dir like the reference's random
   dirs (SparkYahooRunner.scala:82); every bounded drain goes through one
   core (``_drain``) that also removes its checkpoint once the query ends.
@@ -52,7 +53,6 @@ def start_query(
     fmt: str = "noop",
     mode: str = "update",
     available_now: bool = False,
-    trigger_interval_ms: int | None = None,
     query_name: str | None = None,
     options: dict[str, str] | None = None,
 ) -> StreamingQuery:
@@ -63,34 +63,21 @@ def start_query(
         writer = writer.queryName(query_name)
     for k, v in (options or {}).items():
         writer = writer.option(k, v)
-    return start_writer(writer, available_now, trigger_interval_ms)
+    return start_writer(sdf.sparkSession, writer, available_now)
 
 
 def start_writer(
+    spark: SparkSession,
     writer: DataStreamWriter,
     available_now: bool = False,
-    trigger_interval_ms: int | None = None,
 ) -> StreamingQuery:
-    """Start a configured writer under the reference's emission-policy
-    knobs, without waiting for it.
-
-    - ``trigger_interval_ms`` ≙ Flink's ``flinkTriggerIntervalMillis``
-      (T4, EventAndProcessingTimeTrigger early firing): processing-time
-      trigger cadence for unbounded runs.
-    - ``available_now`` drains bounded input then stops (the deterministic
-      replay policy). Mutually exclusive with the interval trigger.
-
-    The checkpoint is a fresh temp directory that outlives the query; the
-    bounded drains (``_drain``) own and remove theirs.
-    """
-    if available_now and trigger_interval_ms is not None:
-        raise ValueError("availableNow and processingTime triggers are exclusive")
-    writer = writer.option("checkpointLocation", tempfile.mkdtemp(prefix="sb_ckpt_"))
+    """Start a configured writer. ``available_now`` drains bounded input
+    through the one drain core (``_drain``) and returns the terminated
+    query; otherwise the query is left running on a fresh checkpoint
+    directory that outlives it."""
     if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_interval_ms is not None:
-        writer = writer.trigger(processingTime=f"{trigger_interval_ms} milliseconds")
-    return writer.start()
+        return _drain(spark, writer)
+    return writer.option("checkpointLocation", tempfile.mkdtemp(prefix="sb_ckpt_")).start()
 
 
 @contextmanager
@@ -251,8 +238,8 @@ def run_update_with_interval_trigger(
 ) -> DataFrame:
     """T4 end-to-end: drain a bounded stream under a PROCESSING-TIME
     trigger (the reference's early-fire cadence — Flink
-    flinkTriggerIntervalMillis / EventAndProcessingTimeTrigger, and the
-    knob start_query exposes) instead of availableNow.
+    flinkTriggerIntervalMillis / EventAndProcessingTimeTrigger) instead
+    of availableNow.
 
     The query fires every ``trigger_ms``; each micro-batch's update-mode
     emissions land in parquet via foreachBatch (never the driver). The

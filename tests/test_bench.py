@@ -1,12 +1,11 @@
-"""Bench harness (M4/M5) + latency pipeline (M3) tests — bounded file
-replay so trials are deterministic and fast."""
+"""Bench surface tests: the latency pipeline (M3), per-batch stats (M6),
+the generator, and the registry bench's artifact rules."""
 
 from __future__ import annotations
 
 import pytest
 
-from streambench_spark.bench import BenchParams, latency_report, run_benchmark
-from streambench_spark.bench.harness import run_latency_trial, run_throughput_trial
+from streambench_spark.bench import latency_report
 from streambench_spark.catalog import load_table
 from streambench_spark.sources.replay import stream_table
 from streambench_spark.streaming.ysb import ysb_streaming
@@ -25,22 +24,6 @@ def test_latency_report_percentiles():
     assert r["avg"] == 50.5
     assert r["p95"] == 95.0 and r["p99"] == 99.0
     assert latency_report([])["p99"] == 0.0
-
-
-def test_throughput_trial_bounded(spark):
-    params = BenchParams(duration_s=5)
-    m = run_throughput_trial(spark, params, source=_bounded_source(spark))
-    assert m["rows"] > 0
-    assert m["throughput_rows_per_s"] > 0
-    assert m["totalDurationMillis"] > 0
-
-
-def test_latency_trial_bounded(spark):
-    params = BenchParams(duration_s=5)
-    m = run_latency_trial(spark, params, source=_bounded_source(spark))
-    assert m["latency_batches"] >= 1
-    assert m["latency_total_ms"] > 0
-    assert m["latency_max_ms"] >= m["latency_p99_ms"] >= m["latency_min_ms"]
 
 
 def test_latency_marking_sink_stamps_after_collect(spark, tmp_path):
@@ -76,37 +59,6 @@ def test_latency_marking_sink_stamps_after_collect(spark, tmp_path):
     assert len(recs) == 3
     for arrival_ms, _, max_last_update_ms in recs:
         assert arrival_ms >= max_last_update_ms
-
-
-def test_benchmark_trial_loop(spark):
-    params = BenchParams(trials=2, warmup_trials=1, duration_s=5)
-    report = run_benchmark(spark, params, source_factory=lambda: _bounded_source(spark))
-    assert len(report["trials"]) == 3
-    assert sum(1 for t in report["trials"] if t["warmup"]) == 1
-    assert report["median_throughput_rows_per_s"] > 0
-    assert report["params"]["window"] == "10 seconds"
-    # deterministic (replay) mode must NOT publish a latency tuple: the
-    # frozen event times would make arrival−event_time clock skew, not
-    # latency (round-4 review find)
-    for t in report["trials"]:
-        assert "totalDurationMillis" in t and "latency_total_ms" not in t
-
-
-def test_benchmark_zero_trials_no_crash(spark):
-    """trials=0 (warmup-only smoke run) must return cleanly, not
-    IndexError after discarding the warmup results."""
-    params = BenchParams(trials=0, warmup_trials=1, duration_s=5)
-    report = run_benchmark(spark, params, source_factory=lambda: _bounded_source(spark))
-    assert len(report["trials"]) == 1
-    assert report["median_throughput_rows_per_s"] is None
-
-
-def test_params_from_env(monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_TRIALS", "7")
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_WINDOW", "30 seconds")
-    p = BenchParams.from_env()
-    assert p.trials == 7
-    assert p.window == "30 seconds"
 
 
 def test_progress_stats_shape(spark):

@@ -199,21 +199,6 @@ def test_ysb_on_generated_data_matches_manual(spark):
     assert total == 2000  # 1/3 of 6000, all ads resolve
 
 
-def test_kafka_paths_raise_clear_error_without_broker(spark):
-    """S3/S4 gating: no broker/package here — the builders must fail with
-    an actionable RuntimeError, not a raw py4j stack."""
-    import pytest as _pytest
-
-    from streambench_spark.sinks.sinks import kafka_batch_sink
-    from streambench_spark.sources.kafka import kafka_batch_source
-
-    with _pytest.raises(RuntimeError, match="Kafka integration unavailable"):
-        kafka_batch_source(spark, "t", "localhost:9")
-    df = spark.range(1).select(F.col("id").alias("x"))
-    with _pytest.raises(RuntimeError, match="Kafka integration unavailable"):
-        kafka_batch_sink(df, "t", "localhost:9")
-
-
 def test_salted_grouped_agg_equals_plain(spark):
     """Skew mitigation: two-phase salted aggregate == plain groupBy."""
     from streambench_spark.operators.aggregates import salted_grouped_agg
@@ -803,16 +788,10 @@ def test_append_watermark_evicts_window_state(spark, tmp_path):
         .select(F.unix_millis("w.start").alias("ws"), "n")
     )
     out_dir = str(tmp_path / "out")
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    try:
-        q = start_query(
-            agg, fmt="parquet", mode="append", available_now=True,
-            options={"path": out_dir},
-        )
-        assert q.awaitTermination(180), "drain timed out"
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    q = start_query(
+        agg, fmt="parquet", mode="append", available_now=True,
+        options={"path": out_dir},
+    )
     emitted = spark.read.schema("ws long, n long").parquet(out_dir)
     got = {r["ws"]: r["n"] for r in emitted.collect()}
     assert len(got) == 11 and all(n == 10 for n in got.values())
@@ -1117,14 +1096,19 @@ def test_python_workers_fork_from_preloaded_daemon(spark):
     assert {r[0] for r in spark.range(4).select(has_pandas("id")).collect()} == {True}
 
 def test_bounded_drains_remove_their_checkpoint(spark, tmp_path, monkeypatch):
-    """Append, update, memory and incremental-MV drains, and the CMS
-    registry query's drain, leave no sb_ckpt_* directory behind; the
-    output directories stay (the result reads them)."""
+    """Append, update, memory and incremental-MV drains, the CMS registry
+    query's drain, and the availableNow runs of latency_marking_sink and
+    start_query leave no sb_ckpt_* directory behind; the output
+    directories stay (the result reads them)."""
     import tempfile
 
     from streambench_spark.plans.queries import REGISTRY
-    from streambench_spark.sinks.sinks import incremental_mv_sink
-    from streambench_spark.streaming.ysb import run_append_to_parquet, run_update_to_parquet
+    from streambench_spark.sinks.sinks import incremental_mv_sink, latency_marking_sink
+    from streambench_spark.streaming.ysb import (
+        run_append_to_parquet,
+        run_update_to_parquet,
+        start_query,
+    )
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     ev = stream_table(spark, SF_DIR, "events")
@@ -1135,15 +1119,44 @@ def test_bounded_drains_remove_their_checkpoint(spark, tmp_path, monkeypatch):
     mv = str(tmp_path / "mv")
     incremental_mv_sink(ev, mv, lambda b: b.groupBy("event_type").count())
     cms = REGISTRY["cms_streaming_merge"].fn(spark, SF_DIR)
+    collector: list = []
+    latency_marking_sink(
+        ev.withColumn("last_update_ms", F.unix_millis("ts")), collector,
+        mode="append", available_now=True,
+    )
+    files = str(tmp_path / "files")
+    start_query(ev.select("event_id"), fmt="parquet", mode="append",
+                available_now=True, options={"path": files})
     assert appended.count() == n_events
     assert counted.count() > 0
     assert spark.table(table).agg(F.sum("count")).first()[0] == n_events
     assert spark.read.parquet(mv).agg(F.sum("count")).first()[0] == n_events
     assert cms.count() > 0
+    assert sum(rows for _, rows, _ in collector) == n_events
+    assert spark.read.parquet(files).count() == n_events
     left = sorted(p.name for p in tmp_path.iterdir())
     assert not [n for n in left if n.startswith("sb_ckpt_")], left
     assert [n for n in left if n.startswith("sb_append_out_")]
     assert [n for n in left if n.startswith("sb_update_out_")]
+
+
+def test_one_drain_core_in_the_package_source():
+    """Every bounded drain goes through streaming/ysb._drain: no other
+    module of the package starts an availableNow trigger or waits on a
+    query, and _drain is the one availableNow site."""
+    import pathlib
+
+    import streambench_spark
+
+    root = pathlib.Path(streambench_spark.__file__).parent
+    core = root / "streaming" / "ysb.py"
+    for path in sorted(root.rglob("*.py")):
+        if path == core:
+            continue
+        text = path.read_text()
+        for needle in ("availableNow=True", "awaitTermination("):
+            assert needle not in text, f"{path.relative_to(root)}: {needle}"
+    assert core.read_text().count("availableNow=True") == 1
 
 
 def test_running_counts_across_batches_with_nulls(spark, tmp_path, monkeypatch):
